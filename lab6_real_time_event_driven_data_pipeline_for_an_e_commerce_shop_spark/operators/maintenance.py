@@ -16,11 +16,11 @@ the cost-based optimizer and AQE of cardinality signals.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 
 def compact(
@@ -30,7 +30,8 @@ def compact(
     sort_by: list[str] | None = None,
 ) -> int:
     """Rewrite ``path`` into ceil(total_bytes / target) files; returns
-    the new file count. Atomic-ish: writes to a temp dir, then swaps."""
+    the new file count. Commits through :mod:`operators.commit`."""
+    commit.recover(path)
     total = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _, fs in os.walk(path)
@@ -42,10 +43,8 @@ def compact(
     out = df.repartition(n_files)
     if sort_by:
         out = out.sortWithinPartitions(*sort_by)
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    out.write.mode("overwrite").parquet(commit.next_path(path))
+    commit.swap(path)
     return n_files
 
 
@@ -87,10 +86,11 @@ def zorder_compact(
     The Morton key comes from :func:`operators.layout.zorder_key` —
     the single Z-order implementation (broadcast-bounds, no driver
     collect); this helper only adds size-targeted file-count planning
-    and the atomic directory swap.
+    and the directory commit (:mod:`operators.commit`).
     """
     from . import layout
 
+    commit.recover(path)
     total = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _, fs in os.walk(path)
@@ -107,10 +107,8 @@ def zorder_compact(
         .sortWithinPartitions("_zkey")
         .drop(*drop)
     )
-    tmp = f"{path}__zorder_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    out.write.mode("overwrite").parquet(commit.next_path(path))
+    commit.swap(path)
     return n_files
 
 

@@ -11,10 +11,10 @@ This container has no delta-spark package, so the engine provides:
    used verbatim when delta-spark is on the classpath (production path).
 2. :func:`merge_parquet` — a pure-Spark fallback with the same
    semantics: anti-join out matched target rows, union the source,
-   atomically swap the table directory. Partition-aware: when a
-   partition column is given, only partitions present in the source are
-   rewritten (the rest are untouched — at 100 TB you must never rewrite
-   the whole table for a daily increment).
+   commit the rewrite through :mod:`operators.commit`. Partition-aware:
+   with a partition column, only partitions present in the source are
+   rewritten, in place by Spark's dynamic partition overwrite (the rest
+   are untouched — never rewrite 100 TB for a daily increment).
 
 Idempotence contract (FIXTURES.md §3 case 8): running the same source
 batch twice leaves the table byte-identical.
@@ -23,11 +23,11 @@ batch twice leaves the table byte-identical.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 
 def delta_available() -> bool:
@@ -95,6 +95,35 @@ def check_source_unique(source: DataFrame, keys: list[str]) -> None:
         )
 
 
+def resolve_duplicates(
+    source: DataFrame, keys: list[str], on_duplicate_source: str
+) -> DataFrame:
+    """The one ``on_duplicate_source`` dispatch of every MERGE path:
+    "error" raises on a duplicate key (:func:`check_source_unique`);
+    "dedupe" keeps one row per key, the highest md5 of the JSON non-key
+    payload — a winner by CONTENT, so identical runs write identical
+    tables; "unique_by_construction" skips the check (see :func:`merge`)."""
+    if on_duplicate_source == "error":
+        check_source_unique(source, keys)
+    elif on_duplicate_source == "dedupe":
+        non_keys = [c for c in source.columns if c not in keys]
+        if not non_keys:  # duplicates are identical rows
+            return source.dropDuplicates(keys)
+        from pyspark.sql.window import Window
+
+        w = Window.partitionBy(*keys).orderBy(
+            F.md5(F.to_json(F.struct(*non_keys))).desc()
+        )
+        return (
+            source.withColumn("_dup_rn", F.row_number().over(w))
+            .filter(F.col("_dup_rn") == 1)
+            .drop("_dup_rn")
+        )
+    elif on_duplicate_source != "unique_by_construction":
+        raise ValueError(f"unknown on_duplicate_source={on_duplicate_source!r}")
+    return source
+
+
 def merge_delta(spark: SparkSession, target_path: str, source: DataFrame, keys: list[str]) -> None:
     """Real Delta MERGE (reference transform.py:331-336), used when
     delta-spark is installed."""
@@ -130,24 +159,16 @@ def merge_parquet(
     overwrite) — incremental cost proportional to the increment, not the
     table.
 
-    ``on_duplicate_source``: "error" (default) raises on a source with
-    more than one row per key — see :func:`check_source_unique`;
-    "dedupe" keeps the pre-r9 nondeterministic dropDuplicates collapse
-    for callers that explicitly want last-writer-undefined semantics;
-    "unique_by_construction" skips the check job for sources that are
-    key-unique by PLAN SHAPE (see :func:`merge`).
+    ``on_duplicate_source``: see :func:`resolve_duplicates`.
     """
-    if on_duplicate_source == "error":
-        check_source_unique(source, keys)
-    elif on_duplicate_source == "dedupe":
-        source = source.dropDuplicates(keys)
-    elif on_duplicate_source != "unique_by_construction":
-        raise ValueError(f"unknown on_duplicate_source={on_duplicate_source!r}")
+    source = resolve_duplicates(source, keys, on_duplicate_source)
+    commit.recover(target_path)
     if not os.path.exists(target_path):
         writer = source.write.mode("overwrite")
         if partition_col:
             writer = writer.partitionBy(partition_col)
-        writer.parquet(target_path)
+        writer.parquet(commit.next_path(target_path))
+        commit.swap(target_path)
         return
 
     def _stable_order(target: DataFrame, merged: DataFrame) -> DataFrame:
@@ -191,15 +212,8 @@ def merge_parquet(
     target = spark.read.parquet(target_path)
     kept = target.join(source.select(keys), keys, "left_anti")
     merged = _stable_order(target, kept.unionByName(source, allowMissingColumns=True))
-    # full rewrite via temp dir + 3-step swap: the window where neither
-    # directory exists is eliminated (old data survives as __old until
-    # the new directory is in place)
-    tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old)
+    merged.write.mode("overwrite").parquet(commit.next_path(target_path))
+    commit.swap(target_path)
 
 
 def replace_where(
@@ -214,8 +228,8 @@ def replace_where(
     needs; r6 ADVICE fix for the streaming CMS store).
 
     Delta path uses the engine's own replaceWhere option; the parquet
-    fallback anti-filters the range and swaps atomically (3-step
-    rename, same crash contract as merge_parquet)."""
+    fallback anti-filters the range and commits the rewrite through
+    :mod:`operators.commit`, like merge_parquet."""
     if delta_available():
         (
             source.write.format("delta")
@@ -224,21 +238,16 @@ def replace_where(
             .save(target_path)
         )
         return
-    if not os.path.exists(target_path):
-        source.write.mode("overwrite").parquet(target_path)
-        return
-    target = spark.read.parquet(target_path)
-    kept = target.filter(f"NOT ({condition})")
-    cols = list(target.columns) + [
-        c for c in source.columns if c not in target.columns
-    ]
-    merged = kept.unionByName(source, allowMissingColumns=True).select(cols)
-    tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old)
+    commit.recover(target_path)
+    if os.path.exists(target_path):
+        target = spark.read.parquet(target_path)
+        kept = target.filter(f"NOT ({condition})")
+        cols = list(target.columns) + [
+            c for c in source.columns if c not in target.columns
+        ]
+        source = kept.unionByName(source, allowMissingColumns=True).select(cols)
+    source.write.mode("overwrite").parquet(commit.next_path(target_path))
+    commit.swap(target_path)
 
 
 class _overwrite_conf:
@@ -266,9 +275,8 @@ def merge(
     multi-match error fires only for duplicate keys that hit existing
     target rows — all-new duplicates would double-insert silently.
     ``on_duplicate_source='dedupe'`` (explicit opt-in) collapses
-    duplicate-key sources via dropDuplicates on either branch — callers
-    keep the Delta path instead of having to call merge_parquet directly
-    (r9 ADVICE).
+    duplicate-key sources to a deterministic winner on either branch
+    (see :func:`resolve_duplicates`).
 
     ``on_duplicate_source='unique_by_construction'`` (r18, explicit
     opt-in) SKIPS the uniqueness-check job: only for sources that are
@@ -278,14 +286,7 @@ def merge(
     weaker keeps the default check (the r8 q37 lesson: 'happens to be
     unique at this SF' is not by-construction)."""
     if delta_available():
-        if on_duplicate_source == "error":
-            check_source_unique(source, keys)
-        elif on_duplicate_source == "dedupe":
-            source = source.dropDuplicates(keys)
-        elif on_duplicate_source != "unique_by_construction":
-            raise ValueError(
-                f"unknown on_duplicate_source={on_duplicate_source!r}"
-            )
+        source = resolve_duplicates(source, keys, on_duplicate_source)
         merge_delta(spark, target_path, source, keys)
     else:
         merge_parquet(

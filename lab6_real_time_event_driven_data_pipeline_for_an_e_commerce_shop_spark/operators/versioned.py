@@ -1,10 +1,11 @@
 """Versioned parquet tables: snapshot-isolated publish + keyed MERGE +
 time travel + vacuum, with zero table-format dependencies.
 
-Why: :func:`upsert.merge_parquet`'s directory swap is atomic for the
-WRITER, but a reader that resolved the directory just before the swap
-can find its files deleted mid-scan — acceptable inside one driver
-(the repo's plans all materialize before swapping), wrong for a table
+Why: the directory commit behind :func:`upsert.merge_parquet`
+(:mod:`operators.commit`) is crash-recoverable for the WRITER, but a
+reader that resolved the directory just before the swap can find its
+files deleted mid-scan — acceptable inside one driver (the repo's
+plans all materialize before swapping), wrong for a table
 SERVED to concurrent readers. The lakehouse fix (Delta/Iceberg) is a
 log of immutable snapshots; this module is that idea reduced to its
 load-bearing minimum (SCALING.md "what we'd change on a real
@@ -34,9 +35,9 @@ cluster" — gold serving):
 - :func:`history` — generation listing with file counts and bytes.
 
 Pointer atomicity: the pointer is a one-line file updated via
-``os.replace`` (atomic on POSIX and NTFS). On an object store the
-equivalent is a conditional PUT of the pointer object — the same
-single-object commit point.
+:func:`commit.write_text_atomic` (an atomic rename on POSIX and NTFS).
+On an object store the equivalent is a conditional PUT of the pointer
+object — the same single-object commit point.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import upsert
+from . import commit, upsert
 
 _POINTER = "_LATEST"
 
@@ -105,10 +106,7 @@ def publish(
 
         with open(os.path.join(_gen_dir(root, next_gen), "_META.json"), "w") as f:
             _json.dump(meta, f)
-    tmp = os.path.join(root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(next_gen))
-    os.replace(tmp, os.path.join(root, _POINTER))  # atomic commit
+    commit.write_text_atomic(os.path.join(root, _POINTER), str(next_gen))
     return next_gen
 
 
@@ -161,31 +159,7 @@ def merge_versioned(
     never inserted) — Delta's whenMatchedDelete. Returns the new
     generation; the previous generation keeps serving any reader that
     already resolved it."""
-    if on_duplicate_source == "error":
-        upsert.check_source_unique(source, keys)
-    elif on_duplicate_source == "dedupe":
-        # deterministic winner per key (dropDuplicates keeps an
-        # arbitrary row, so two identical runs could publish different
-        # generations — counter to the repo's determinism discipline):
-        # highest md5 of the JSON-serialized non-key payload wins, a
-        # total order over row CONTENT, independent of partitioning.
-        non_keys = [c for c in source.columns if c not in keys]
-        if non_keys:
-            from pyspark.sql.window import Window
-
-            w = Window.partitionBy(*keys).orderBy(
-                F.md5(F.to_json(F.struct(*non_keys))).desc()
-            )
-            source = (
-                source.withColumn("_dup_rn", F.row_number().over(w))
-                .filter(F.col("_dup_rn") == 1)
-                .drop("_dup_rn")
-            )
-        else:
-            source = source.dropDuplicates(keys)
-    else:
-        raise ValueError(f"unknown on_duplicate_source={on_duplicate_source!r}")
-
+    source = upsert.resolve_duplicates(source, keys, on_duplicate_source)
     if delete_col is not None:
         tombstones = source.filter(F.col(delete_col)).select(keys)
         source = source.filter(

@@ -41,7 +41,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import upsert
+from ..operators import commit, upsert
 from ..operators.curation import numeric_bucket_expr, psi_from_counts
 
 
@@ -152,18 +152,17 @@ class DriftMonitor:
             counts.write.mode("overwrite").parquet(
                 os.path.join(art, "counts")
             )
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
+            commit.write_text_atomic(
+                meta_path,
+                json.dumps(
                     {
                         "mode": mode,
                         "thresholds": self.thresholds,
                         "total_old": self.total_old,
                         "value_col": value_col,
-                    },
-                    f,
-                )
-            os.replace(tmp, meta_path)
+                    }
+                ),
+            )
         self._baseline_counts = self.spark.read.parquet(
             os.path.join(art, "counts")
         )

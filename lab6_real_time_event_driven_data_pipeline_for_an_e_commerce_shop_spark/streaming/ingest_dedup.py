@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators import upsert
+from ..operators import commit, upsert
 
 
 class DedupIngest:
@@ -92,7 +92,7 @@ class DedupIngest:
             .drop("_rn")
         )
         store_path = self._path("fingerprints")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if os.path.isdir(store_path):
             seen = self.spark.read.parquet(store_path).select("_fp")
             firsts = firsts.join(seen, "_fp", "left_anti")
@@ -141,10 +141,11 @@ class DedupIngest:
 
     # -- readers -----------------------------------------------------------
     def kept(self) -> DataFrame:
+        commit.recover(self._path("kept"))
         return self.spark.read.parquet(self._path("kept"))
 
     def fingerprints(self) -> DataFrame:
-        _finish_store_compaction(self._path("fingerprints"))
+        commit.recover(self._path("fingerprints"))
         return self.spark.read.parquet(self._path("fingerprints"))
 
     # -- maintenance ---------------------------------------------------------
@@ -162,23 +163,24 @@ class DedupIngest:
         kept texts still dedup exactly.
 
         Safe to run BETWEEN waves only (never concurrent with
-        run_available). Crash-recoverable at every step via the fixed
-        sibling-dir swap; a compaction run right after a crash BETWEEN
-        the kept and fingerprint merges absorbs the missing fingerprint
-        rows (kept is merged first), and the replayed batch then
+        run_available). Crash-recoverable at every step via the
+        operators.commit protocol; a compaction run right after a crash
+        BETWEEN the kept and fingerprint merges absorbs the missing
+        fingerprint rows (kept is merged first), and the replayed batch then
         no-ops. Kept texts carry pairwise-distinct fingerprints by the
         admission invariant (a text is only merged when its fingerprint
         was absent from the store), so the rebuilt store is key-unique.
         """
         store_path = self._path("fingerprints")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if not os.path.isdir(store_path):
             return
         compacted = self.kept().select(
             _exact_fp(F.col(self.text_col)).alias("_fp"),
             F.col(self.id_col).alias("keep_id"),
         )
-        _swap_store(compacted, store_path)
+        compacted.write.mode("overwrite").parquet(commit.next_path(store_path))
+        commit.swap(store_path)
 
 
 def _exact_fp(text: F.Column) -> F.Column:
@@ -186,44 +188,6 @@ def _exact_fp(text: F.Column) -> F.Column:
     lowercased text — shared by the per-batch gate and compaction (the
     rebuilt store must hash EXACTLY like the additive one)."""
     return F.md5(F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")))
-
-
-def _finish_store_compaction(store_path: str) -> None:
-    """Recover a store from a crash inside :func:`_swap_store`. The
-    swap uses FIXED sibling names so recovery is decidable from the
-    directory state alone:
-
-      store missing + __compact_new present  → the old store was moved
-        aside but the new one not yet moved in: finish the swap.
-      store missing + only __compact_old     → cannot happen (the new
-        dir is written before the old is moved) — restore the old
-        store defensively anyway.
-      store present                          → any leftover __compact_*
-        dirs are orphans from a crash before/after the swap: drop them.
-    """
-    new, old = store_path + "__compact_new", store_path + "__compact_old"
-    if not os.path.isdir(store_path):
-        if os.path.isdir(new):
-            os.rename(new, store_path)
-        elif os.path.isdir(old):
-            os.rename(old, store_path)
-    for p in (new, old):
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def _swap_store(compacted: DataFrame, store_path: str) -> None:
-    """Replace ``store_path`` with ``compacted``, crash-recoverable at
-    every step (finish with :func:`_finish_store_compaction`):
-    write the new generation to a sibling dir first, then two renames.
-    The only window where ``store_path`` itself is absent is between
-    the renames, and recovery completes the swap from the fixed
-    sibling names."""
-    new, old = store_path + "__compact_new", store_path + "__compact_old"
-    compacted.write.mode("overwrite").parquet(new)
-    os.rename(store_path, old)
-    os.rename(new, store_path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def _one_row_per_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -324,7 +288,7 @@ class NearDupIngest:
     kept = DedupIngest.kept
 
     def signatures(self) -> DataFrame:
-        _finish_store_compaction(self._path("signatures"))
+        commit.recover(self._path("signatures"))
         return self.spark.read.parquet(self._path("signatures"))
 
     def compact(self) -> None:
@@ -340,14 +304,14 @@ class NearDupIngest:
         against a corpus that no longer contains them.
 
         Safe BETWEEN waves only (never concurrent with run_available).
-        Crash-recoverable via the fixed sibling-dir swap, healed at
+        Crash-recoverable via the operators.commit protocol, healed at
         every store read. A compaction right after a crash between the
         kept and signature merges ABSORBS the missing signature rows
         (kept merges first); the replayed batch then re-rejects those
         docs against their own stored signatures — harmless, they are
         already kept (the EmbeddingDedupIngest replay argument)."""
         store_path = self._path("signatures")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if not os.path.isdir(store_path):
             return
         from ..functions import cache as _cache
@@ -363,7 +327,8 @@ class NearDupIngest:
         compacted = dedup.minhash_signatures(
             self.kept(), self.k, self.shingle_k, self.text_col, self.id_col
         ).select(self.id_col, *[f"mh_{i}" for i in range(self.k)])
-        _swap_store(compacted, store_path)
+        compacted.write.mode("overwrite").parquet(commit.next_path(store_path))
+        commit.swap(store_path)
         _cache.release("dedup.minhash_signatures")
 
     def _process(self, batch: DataFrame, batch_id: int) -> None:
@@ -380,7 +345,7 @@ class NearDupIngest:
         # cross-corpus rejection: band equi-join against the kept
         # store, verified by integer signature agreement
         store_path = self._path("signatures")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if os.path.isdir(store_path):
             store_sigs = self.spark.read.parquet(store_path)
             cands = (
@@ -545,9 +510,6 @@ class QualityIngest:
         scored = uniq.select(self.id_col, self.text_col).join(
             verdict, self.id_col
         )
-        # heal a crashed compact BEFORE merging — a merge while the real
-        # table sits in __compact_new would fork a second store
-        _finish_store_compaction(self._path("verdicts"))
         upsert.merge(
             self.spark, self._path("verdicts"), scored, keys=[self.id_col]
         )
@@ -568,17 +530,18 @@ class QualityIngest:
         the re-scored verdict is identical for identical text. kept()/
         quarantined() shrink to the live set, which is the point.
 
-        Safe BETWEEN waves only; crash-recoverable via the fixed
-        sibling-dir swap, healed at every read and before every
+        Safe BETWEEN waves only; crash-recoverable via the
+        operators.commit protocol, healed at every read and before every
         merge."""
         store_path = self._path("verdicts")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if not os.path.isdir(store_path):
             return
         compacted = self.spark.read.parquet(store_path).join(
             live_ids.select(self.id_col).distinct(), self.id_col, "left_semi"
         )
-        _swap_store(compacted, store_path)
+        compacted.write.mode("overwrite").parquet(commit.next_path(store_path))
+        commit.swap(store_path)
 
     def run_available(self) -> None:
         stream = (
@@ -600,7 +563,7 @@ class QualityIngest:
         # before any batch has landed (e.g. an empty landing dir drained
         # by run_available) there is no verdicts table — return an empty
         # frame with the verdict schema instead of a raw AnalysisException
-        _finish_store_compaction(self._path("verdicts"))
+        commit.recover(self._path("verdicts"))
         if not os.path.isdir(self._path("verdicts")):
             from pyspark.sql import types as T
 
@@ -695,7 +658,7 @@ class SpanDedupIngest:
     kept = DedupIngest.kept
 
     def winhashes(self) -> DataFrame:
-        _finish_store_compaction(self._path("winhashes"))
+        commit.recover(self._path("winhashes"))
         return self.spark.read.parquet(self._path("winhashes"))
 
     def compact(self) -> None:
@@ -707,12 +670,12 @@ class SpanDedupIngest:
         here is a pure garbage collection: coverage decisions against
         the rebuilt store are identical to the additive store for every
         text currently kept. Safe BETWEEN waves only; crash-recoverable
-        via the fixed sibling-dir swap; a compaction right after a
+        via the operators.commit protocol; a compaction right after a
         crash between the kept and store merges absorbs the missing
         window rows (kept merges first), and the replayed batch then
         recomputes identical cleaned rows (src_id self-exclusion)."""
         store_path = self._path("winhashes")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if not os.path.isdir(store_path):
             return
         from ..operators import dedup
@@ -720,7 +683,8 @@ class SpanDedupIngest:
         compacted = dedup._window_hashes(
             self.kept(), self.min_len, self.text_col, self.id_col
         ).select("_h", F.col("_id").alias("src_id")).distinct()
-        _swap_store(compacted, store_path)
+        compacted.write.mode("overwrite").parquet(commit.next_path(store_path))
+        commit.swap(store_path)
 
     def _process(self, batch: DataFrame, batch_id: int) -> None:
         from ..operators import dedup
@@ -736,7 +700,7 @@ class SpanDedupIngest:
         )
         covered = w.join(dup_in_batch, "_h", "left_semi")
         store_path = self._path("winhashes")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if os.path.isdir(store_path):
             store = self.spark.read.parquet(store_path)
             hit = w.join(
@@ -1128,7 +1092,7 @@ class EmbeddingDedupIngest:
     kept = DedupIngest.kept
 
     def vectors(self) -> DataFrame:
-        _finish_store_compaction(self._path("vectors"))
+        commit.recover(self._path("vectors"))
         return self.spark.read.parquet(self._path("vectors"))
 
     def compact(self) -> None:
@@ -1138,7 +1102,7 @@ class EmbeddingDedupIngest:
         stay out, per the class policy), so store size tracks the live
         corpus and vectors externally removed from kept (downstream GC)
         stop rejecting newcomers. Safe BETWEEN waves only;
-        crash-recoverable via the fixed sibling-dir swap, healed at
+        crash-recoverable via the operators.commit protocol, healed at
         every store read. A compaction right after a crash between the
         kept and vector merges ABSORBS the missing vectors; the
         replayed batch then re-rejects those vectors against their own
@@ -1147,14 +1111,15 @@ class EmbeddingDedupIngest:
         from ..operators.similarity import norm as _norm
 
         store_path = self._path("vectors")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if not os.path.isdir(store_path):
             return
         compacted = self.kept().select(
             F.col(self.id_col).alias("vec_id"),
             F.col(self.vec_col).alias(self.vec_col),
         ).filter(F.coalesce(_norm(F.col(self.vec_col)) > 0, F.lit(False)))
-        _swap_store(compacted, store_path)
+        compacted.write.mode("overwrite").parquet(commit.next_path(store_path))
+        commit.swap(store_path)
 
     def _tagged(self, df: DataFrame) -> DataFrame:
         from ..operators import similarity
@@ -1229,7 +1194,7 @@ class EmbeddingDedupIngest:
         tagged = tagged.filter(_cmp)
         survivors = tagged
         store_path = self._path("vectors")
-        _finish_store_compaction(store_path)
+        commit.recover(store_path)
         if os.path.isdir(store_path):
             stored = self._tagged(
                 self.spark.read.parquet(store_path).withColumnRenamed(

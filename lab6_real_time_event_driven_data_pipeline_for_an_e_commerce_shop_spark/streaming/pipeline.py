@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 from ..operators import enrich as enrich_op
-from ..operators import kpis, setops, upsert, validation
+from ..operators import commit, kpis, setops, upsert, validation, versioned
 
 
 def _first_item_per_pair(items: DataFrame, id_col: str = "id") -> DataFrame:
@@ -115,6 +115,10 @@ class MedallionPipeline:
             .csv(self.landing(table))
         )
         rules = validation.rules_for(table)
+        # heal a crashed staging swap BEFORE appending: an append into
+        # a missing staging dir would create a fresh one and recover
+        # would then drop the pending groups parked in __old/__next
+        commit.recover(self._path("staging", table))
 
         def process(batch: DataFrame, batch_id: int) -> None:
             valid, quarantine = validation.split_valid(batch, rules)
@@ -145,15 +149,7 @@ class MedallionPipeline:
     def _staging(self, table: str) -> DataFrame:
         path = self._path("staging", table)
         schema = schemas.ECOMMERCE_SCHEMAS[table]
-        if not os.path.isdir(path):
-            # crash-window recovery: _swap renames staging -> __old, then
-            # __next -> staging. A crash between the renames leaves __next
-            # (preferred: it reflects the completed promotion) or only
-            # __old (pre-promotion state). Restore whichever exists.
-            for cand in (path + "__next", path + "__old"):
-                if os.path.isdir(cand):
-                    os.rename(cand, path)
-                    break
+        commit.recover(path)
         if not os.path.isdir(path):
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(path)
@@ -191,6 +187,7 @@ class MedallionPipeline:
         late = None
         late_ids = None
         silver_path = self._path("silver", "enriched")
+        commit.recover(silver_path)
         if os.path.isdir(silver_path):
             silver_orders = (
                 self.spark.read.parquet(silver_path)
@@ -328,10 +325,10 @@ class MedallionPipeline:
         tables = (("orders", remaining_orders), ("order_items", remaining_items))
         for table, remaining in tables:
             remaining.write.mode("overwrite").parquet(
-                self._path("staging", table) + "__next"
+                commit.next_path(self._path("staging", table))
             )
         for table, _ in tables:
-            self._swap(self._path("staging", table))
+            commit.swap(self._path("staging", table))
         complete.unpersist()
         if late_enriched is not None:
             self._record_late_audit(late_enriched)
@@ -358,6 +355,7 @@ class MedallionPipeline:
             F.count(F.lit(1)).alias("late_items_absorbed")
         )
         path = self._path("gold", "late_audit")
+        commit.recover(path)  # the previous counts must be read, not lost
         if os.path.isdir(path):
             prev = self.spark.read.parquet(path).select(
                 "order_date", F.col("late_items_absorbed").alias("_prev")
@@ -376,21 +374,6 @@ class MedallionPipeline:
             on_duplicate_source="unique_by_construction",
         )
 
-    def _swap(self, path: str) -> None:
-        """3-step swap mirroring upsert.merge_parquet: the old directory
-        survives as __old until the replacement is in place, so a crash
-        never leaves staging/ absent (pending groups stranded invisible
-        in __next). An orphaned __next from a pre-swap crash is healed
-        lazily: it is simply overwritten by the next cycle's write."""
-        import shutil
-
-        old = path + "__old"
-        if os.path.isdir(old):  # leftover from a crash mid-swap
-            shutil.rmtree(old)
-        os.rename(path, old)
-        os.rename(path + "__next", path)
-        shutil.rmtree(old)
-
     # -- EP3b: gold KPI refresh (exact, partition-pruned) --------------------
     def refresh_gold(self, dates: list[str] | None) -> None:
         """Recompute the two KPI tables for the touched order_dates from
@@ -408,31 +391,17 @@ class MedallionPipeline:
         if dates is not None:
             silver = silver.filter(F.col("order_date").isin(dates))
         silver = silver.cache()
-        cat, daily = kpis.category_kpis(silver), kpis.order_kpis_daily(silver)
-        if self.versioned_gold:
-            from ..operators import versioned
-
-            versioned.merge_versioned(
-                self.spark, self._path("gold", "category_kpis"), cat,
-                keys=["category", "order_date"],
-            )
-            versioned.merge_versioned(
-                self.spark, self._path("gold", "order_kpis_daily"), daily,
-                keys=["order_date"],
-            )
-        else:
-            # r18: both KPI frames are aggregations whose groupBy keys
-            # ARE the merge keys — key-unique by plan shape, so the
-            # per-merge uniqueness-check job is skipped (explicit
-            # opt-in; see upsert.merge)
-            upsert.merge(
-                self.spark, self._path("gold", "category_kpis"), cat,
-                keys=["category", "order_date"],
-                on_duplicate_source="unique_by_construction",
-            )
-            upsert.merge(
-                self.spark, self._path("gold", "order_kpis_daily"), daily,
-                keys=["order_date"],
+        merge = versioned.merge_versioned if self.versioned_gold else upsert.merge
+        # both KPI frames are aggregations whose groupBy keys ARE the
+        # merge keys — key-unique by plan shape, so the per-merge
+        # uniqueness-check job is skipped (explicit opt-in; see
+        # upsert.merge)
+        for table, kpi, keys in (
+            ("category_kpis", kpis.category_kpis, ["category", "order_date"]),
+            ("order_kpis_daily", kpis.order_kpis_daily, ["order_date"]),
+        ):
+            merge(
+                self.spark, self._path("gold", table), kpi(silver), keys=keys,
                 on_duplicate_source="unique_by_construction",
             )
         silver.unpersist()
@@ -471,12 +440,14 @@ class MedallionPipeline:
     # -- serving readers -------------------------------------------------------
     def gold(self, table: str) -> DataFrame:
         if self.versioned_gold:
-            from ..operators import versioned
-
             return versioned.read_latest(
                 self.spark, self._path("gold", table)
             )
-        return self.spark.read.parquet(self._path("gold", table))
+        return self._read_committed(self._path("gold", table))
 
     def silver(self) -> DataFrame:
-        return self.spark.read.parquet(self._path("silver", "enriched"))
+        return self._read_committed(self._path("silver", "enriched"))
+
+    def _read_committed(self, path: str) -> DataFrame:
+        commit.recover(path)  # a crashed commit heals before the next cycle
+        return self.spark.read.parquet(path)

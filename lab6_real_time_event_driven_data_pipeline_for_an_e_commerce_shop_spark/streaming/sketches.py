@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import sketches, upsert
+from ..operators import commit, sketches, upsert
 
 REG_KEYS = ["_hll_reg"]
 
@@ -137,24 +137,18 @@ def compact_cms_store(
     (_cms_batch = -1), bounding the store at groups × depth × width
     rows forever. Run once the replay window for the folded batches has
     passed (a re-delivered batch id would otherwise re-add rows the
-    compaction already absorbed). Atomic via the tmp + rename swap —
-    the store never observably holds both generations."""
-    import os
-    import shutil
-    import uuid
-
+    compaction already absorbed). Commits through
+    :mod:`operators.commit` — the store never observably holds both
+    generations, and a crash at any step leaves one of them."""
     from pyspark.sql import functions as F
 
+    commit.recover(store_path)
     compacted = (
         read_cms_cells(spark, store_path, group_cols)
         .withColumn("_cms_batch", F.lit(-1).cast("long"))
     )
-    tmp = f"{store_path}__tmp_{uuid.uuid4().hex[:8]}"
-    compacted.write.mode("overwrite").parquet(tmp)
-    old = f"{store_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old)
+    compacted.write.mode("overwrite").parquet(commit.next_path(store_path))
+    commit.swap(store_path)
 
 
 def read_cms_estimates(

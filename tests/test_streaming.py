@@ -3017,51 +3017,6 @@ def test_span_dedup_ingest_store_compaction_tracks_live_corpus(
     )
 
 
-def test_store_compaction_swap_crash_recovery(spark, tmp_path):
-    """The compaction swap's three crash windows recover from directory
-    state alone (fixed sibling names): (a) crash mid-write of the new
-    generation → store untouched, orphan dropped; (b) crash between the
-    two renames (store absent, __compact_new complete) → recovery
-    finishes the swap; (c) crash after the swap but before the old
-    generation's cleanup → orphan dropped, store kept."""
-    from lab6_real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.ingest_dedup import (
-        _finish_store_compaction,
-    )
-
-    def _mk(path, vals):
-        spark.createDataFrame(
-            [(v,) for v in vals], "x long"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    def _vals(path):
-        return sorted(r.x for r in spark.read.parquet(path).collect())
-
-    # (a) partial new generation while the store is live
-    store = str(tmp_path / "a" / "store")
-    _mk(store, [1, 2])
-    _mk(store + "__compact_new", [9])  # pretend: incomplete/stale
-    _finish_store_compaction(store)
-    assert _vals(store) == [1, 2]
-    assert not os.path.isdir(store + "__compact_new")
-
-    # (b) between the renames: store gone, new complete, old present
-    store = str(tmp_path / "b" / "store")
-    _mk(store, [1, 2])
-    _mk(store + "__compact_new", [3, 4])
-    os.rename(store, store + "__compact_old")
-    _finish_store_compaction(store)
-    assert _vals(store) == [3, 4]
-    assert not os.path.isdir(store + "__compact_old")
-
-    # (c) swap done, old cleanup missed
-    store = str(tmp_path / "c" / "store")
-    _mk(store, [3, 4])
-    _mk(store + "__compact_old", [1, 2])
-    _finish_store_compaction(store)
-    assert _vals(store) == [3, 4]
-    assert not os.path.isdir(store + "__compact_old")
-
-
 def _rewrite_kept_without(spark, root, tmp_path, drop_ids, id_col="doc_id"):
     """Simulate downstream GC / takedown: rewrite a gate's kept table
     with some ids removed (materialized to a sibling first — the frame's
