@@ -60,17 +60,13 @@ def complete_order_groups(
       2. at least one item row arrived    (oid ∈ order_items)
       3. every product its items reference arrived (∀pid: pid ∈ products)
 
-    Returns the complete order_ids. Expressed as: items left-anti
-    products → orders with a missing product; orders semi items, anti
-    missing."""
-    items_missing_product = order_items.join(
-        products.select(F.col("id").alias("product_id")), "product_id", "left_anti"
-    )
+    Returns the complete order_ids (one per orders row): the is_complete
+    slice of :func:`order_completeness`, one shuffle on order_id instead
+    of stacked semi/anti joins."""
     return (
-        orders.select("order_id")
-        .distinct()
-        .join(order_items.select("order_id").distinct(), "order_id", "left_semi")
-        .join(items_missing_product.select("order_id").distinct(), "order_id", "left_anti")
+        order_completeness(orders, order_items, products)
+        .filter("is_complete")
+        .select("order_id")
     )
 
 
@@ -82,7 +78,7 @@ def order_completeness(
     items side joins the product dimension (broadcast) once, aggregates
     per order (has items ⇔ group exists; complete ⇔ no item missing its
     product), and left-joins back to orders — one shuffle on order_id.
-    ``complete_order_groups`` is the is_complete slice."""
+    :func:`complete_order_groups` is the is_complete slice."""
     prod_keys = products.select(F.col("id").alias("product_id")).withColumn(
         "_p", F.lit(True)
     )

@@ -13,6 +13,7 @@ This container has no delta-spark package, so the engine provides:
    semantics: anti-join out matched target rows, union the source,
    commit the rewrite through :mod:`operators.commit`. Partition-aware:
    with a partition column, only partitions present in the source are
+   read (:func:`read_partitions` lists just their directories) and
    rewritten, in place by Spark's dynamic partition overwrite (the rest
    are untouched — never rewrite 100 TB for a daily increment).
 
@@ -26,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from . import commit
 
@@ -49,18 +51,50 @@ PARTITION_ENUM_CAP = 1024
 
 def enumerate_partitions(
     df: DataFrame, col: str, cap: int | None = None
-) -> list | None:
-    """Distinct values of ``col`` as a driver-side list, or None when
-    more than ``cap`` (default: the module-level PARTITION_ENUM_CAP,
-    resolved at call time so tests can shrink it) values are touched.
-    The collect itself is bounded (limit cap+1), so the driver never
-    materializes an unbounded list."""
+) -> list[str | None] | None:
+    """Distinct values of ``col`` as a driver-side list of their string
+    casts — the text Spark names partition directories from (a date
+    reads ``'2024-03-01'``) — or None when more than ``cap`` (default:
+    the module-level PARTITION_ENUM_CAP, resolved at call time so tests
+    can shrink it) values are touched. The collect itself is bounded
+    (limit cap+1), so the driver never materializes an unbounded list."""
     if cap is None:
         cap = PARTITION_ENUM_CAP
-    rows = df.select(col).distinct().limit(cap + 1).collect()
+    rows = df.select(F.col(col).cast("string")).distinct().limit(cap + 1).collect()
     if len(rows) > cap:
         return None
     return [r[0] for r in rows]
+
+
+def read_partitions(
+    spark: SparkSession, path: str, col: str, values: list[str | None] | None,
+    dtype: DataType | str,
+) -> DataFrame:
+    """The rows of the table at ``path`` whose partition column ``col``
+    has one of ``values`` (string casts, as :func:`enumerate_partitions`
+    returns them), reading only those partitions' directories — never a
+    listing of the whole table. Directory names are Spark's own
+    rendering (escaped value, ``__HIVE_DEFAULT_PARTITION__`` for null);
+    ``col`` is cast back to ``dtype``, because Spark infers its type from
+    the names of the directories read (a null-only read is NullType).
+    When none of them exists yet, one other partition gives the schema
+    and no rows.
+    ``values=None`` (past the enumeration cap) reads the whole table."""
+    if values is None:
+        return spark.read.parquet(path)
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    dirs = dict.fromkeys(  # '' and null share Spark's default partition
+        os.path.join(path, utils.getPartitionPathString(col, v)) for v in values
+    )
+    found = [d for d in dirs if os.path.isdir(d)]
+    reader = spark.read.option("basePath", path)
+    if found:
+        df = reader.parquet(*found)
+    else:
+        other = [e.path for e in os.scandir(path)
+                 if e.is_dir() and e.name.startswith(col + "=")][:1]
+        df = reader.parquet(*(other or [path])).where(F.lit(False))
+    return df.withColumn(col, F.col(col).cast(dtype))
 
 
 def check_source_unique(source: DataFrame, keys: list[str]) -> None:
@@ -150,7 +184,7 @@ def merge_parquet(
     keys: list[str],
     partition_col: str | None = None,
     on_duplicate_source: str = "error",
-) -> None:
+) -> list[str | None] | None:
     """Pure-Spark keyed MERGE with whenMatchedUpdateAll /
     whenNotMatchedInsertAll semantics over a parquet directory.
 
@@ -160,8 +194,12 @@ def merge_parquet(
     table.
 
     ``on_duplicate_source``: see :func:`resolve_duplicates`.
+
+    Returns the partitions the source touches (:func:`enumerate_partitions`;
+    None past the cap or without ``partition_col``).
     """
     source = resolve_duplicates(source, keys, on_duplicate_source)
+    parts = enumerate_partitions(source, partition_col) if partition_col else None
     commit.recover(target_path)
     if not os.path.exists(target_path):
         writer = source.write.mode("overwrite")
@@ -169,7 +207,7 @@ def merge_parquet(
             writer = writer.partitionBy(partition_col)
         writer.parquet(commit.next_path(target_path))
         commit.swap(target_path)
-        return
+        return parts
 
     def _stable_order(target: DataFrame, merged: DataFrame) -> DataFrame:
         """Keep the TABLE's column order across merge generations: the
@@ -183,16 +221,16 @@ def merge_parquet(
         return merged.select(cols)
 
     if partition_col:
-        parts = enumerate_partitions(source, partition_col)
-        target = spark.read.parquet(target_path)
         if parts is not None:
-            # static partition pruning via the literal list (metadata-only)
-            target = target.filter(F.col(partition_col).isin(parts))
+            target = read_partitions(
+                spark, target_path, partition_col, parts,
+                source.schema[partition_col].dataType,
+            )
         else:
             # backfill scale (> cap partitions touched): scope the target
             # read with a broadcast semi-join on the partition column —
             # dynamic partition pruning, no driver-side list at all
-            target = target.join(
+            target = spark.read.parquet(target_path).join(
                 F.broadcast(source.select(partition_col).distinct()),
                 partition_col,
                 "left_semi",
@@ -205,15 +243,22 @@ def merge_parquet(
         merged = _stable_order(
             target, kept.unionByName(source, allowMissingColumns=True)
         ).repartition(partition_col)
-        with _overwrite_conf(spark, "dynamic"):
-            merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
-        return
+        # a per-write option, not the session conf: concurrent writers
+        # in one session never race on a shared setting
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(target_path)
+        )
+        return parts
 
     target = spark.read.parquet(target_path)
     kept = target.join(source.select(keys), keys, "left_anti")
     merged = _stable_order(target, kept.unionByName(source, allowMissingColumns=True))
     merged.write.mode("overwrite").parquet(commit.next_path(target_path))
     commit.swap(target_path)
+    return None
 
 
 def replace_where(
@@ -250,18 +295,6 @@ def replace_where(
     commit.swap(target_path)
 
 
-class _overwrite_conf:
-    def __init__(self, spark: SparkSession, mode: str):
-        self.spark, self.mode = spark, mode
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.mode)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.old)
-
-
 def merge(
     spark: SparkSession,
     target_path: str,
@@ -269,7 +302,7 @@ def merge(
     keys: list[str],
     partition_col: str | None = None,
     on_duplicate_source: str = "error",
-) -> None:
+) -> list[str | None] | None:
     """Dispatch: Delta when available, parquet fallback otherwise. The
     source-uniqueness contract is enforced on BOTH branches: Delta's own
     multi-match error fires only for duplicate keys that hit existing
@@ -284,11 +317,14 @@ def merge(
     exactly the merge keys (gold KPI refreshes, audit counts). The
     caller is asserting a structural fact, not hoping; anything
     weaker keeps the default check (the r8 q37 lesson: 'happens to be
-    unique at this SF' is not by-construction)."""
+    unique at this SF' is not by-construction).
+
+    Returns the partitions the source touches, on both branches (see
+    :func:`merge_parquet`), so callers never enumerate them again."""
     if delta_available():
         source = resolve_duplicates(source, keys, on_duplicate_source)
         merge_delta(spark, target_path, source, keys)
-    else:
-        merge_parquet(
-            spark, target_path, source, keys, partition_col, on_duplicate_source
-        )
+        return enumerate_partitions(source, partition_col) if partition_col else None
+    return merge_parquet(
+        spark, target_path, source, keys, partition_col, on_duplicate_source
+    )

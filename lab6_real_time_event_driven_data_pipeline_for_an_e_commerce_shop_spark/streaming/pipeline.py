@@ -33,20 +33,57 @@ JSON document on the driver.
 Gold KPIs are recomputed per-batch for the affected order_dates only
 and MERGEd — exact countDistinct under streaming (SURVEY.md §2.5 A4:
 exact distinct is not incrementally composable, so recompute the
-touched daily partitions from silver; at 100 TB this is a
-partition-pruned scan of just those dates).
+touched daily partitions from silver). The silver MERGE names the
+dates it touched, and both it and the gold recompute read only those
+partition directories, so a cycle's cost follows the release, not the
+table's partition count.
+
+One cycle (:meth:`MedallionPipeline.run_cycle`) is a fixed staged DAG;
+the Spark actions inside a stage are independent and run concurrently:
+
+    1. ingest        the three availableNow streams
+    2. gate          materialize the complete groups ‖ the late-path temp
+    3. silver        materialize the release, then the silver MERGE
+    4. gold+staging  both gold KPI merges ‖ both staging ``__next`` writes
+    5. drain         swap both staging dirs, late audit, cycle row
+
+Commit order is silver → gold → staging swaps → audit. Until the swaps,
+staging still holds the released groups, so a crash anywhere before
+them re-releases the same groups into the idempotent MERGE and gold
+recompute on restart: gold can never stay stale behind a drained
+staging.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import glob
 import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
 from ..operators import enrich as enrich_op
 from ..operators import commit, kpis, setops, upsert, validation, versioned
+
+
+def _concurrently(spark: SparkSession, *branches) -> list:
+    """Run the stage's ``branches`` (no-argument callables) at once, one
+    thread each, returning their results in order. Each branch runs
+    through ``inheritable_thread_target``, so the caller's job group and
+    local properties follow its Spark jobs. Every branch is joined
+    before the first error propagates: a failed branch never leaves a
+    sibling still writing while the caller's recovery runs."""
+    if not branches:
+        return []
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in branches]
+    return [f.result() for f in futures]
 
 
 def _first_item_per_pair(items: DataFrame, id_col: str = "id") -> DataFrame:
@@ -121,9 +158,17 @@ class MedallionPipeline:
         commit.recover(self._path("staging", table))
 
         def process(batch: DataFrame, batch_id: int) -> None:
-            valid, quarantine = validation.split_valid(batch, rules)
-            valid.write.mode("append").parquet(self._path("staging", table))
-            if quarantine.limit(1).count() > 0:
+            # the quarantined-row count rides the valid write (rows in
+            # minus rows kept), instead of a job re-running the batch
+            seen, kept = Observation(), Observation()
+            counted = batch.observe(seen, F.count(F.lit(1)).alias("rows"))
+            valid, quarantine = validation.split_valid(counted, rules)
+            (
+                valid.observe(kept, F.count(F.lit(1)).alias("rows"))
+                .write.mode("append")
+                .parquet(self._path("staging", table))
+            )
+            if seen.get["rows"] > kept.get["rows"]:
                 (
                     quarantine.withColumn("_violated_rules", F.to_json("_violated_rules"))
                     .withColumn("_batch_id", F.lit(batch_id))
@@ -155,10 +200,11 @@ class MedallionPipeline:
         return self.spark.read.schema(schema).parquet(path)
 
     # -- EP3a: completeness gate → enrich → silver MERGE --------------------
-    def promote_complete_groups(self) -> list[str]:
+    def promote_complete_groups(self) -> list[str] | None:
         """Release referentially-complete order groups from staging into
         silver (reference glue_job.py:221-278 semantics), returning the
-        affected order_dates (for the gold refresh).
+        affected order_dates (for the gold refresh; None past the
+        enumeration cap, see :meth:`refresh_gold`).
 
         Incomplete groups stay in staging untouched — the unbounded-wait
         contract (groups wait indefinitely; SURVEY.md §7 step 10).
@@ -176,19 +222,35 @@ class MedallionPipeline:
         test_late_items_release_after_group_published and exercised
         under the driver gate by q37's two-wave ingest). Orphans whose
         order OR product has never been seen keep waiting, unbounded."""
+        release = self._release()
+        if release is None:
+            return []
+        dates, staging_writes, drain = release
+        _concurrently(self.spark, *staging_writes)
+        drain()
+        return dates
+
+    def _release(self):
+        """Stages 2-3 of a cycle: the completeness gate and the late path,
+        then the silver MERGE. Returns None when nothing releases, else
+        ``(dates, staging_writes, drain)``: the touched order_dates, the
+        two staging ``__next`` writes (independent branches), and the
+        drain that must follow them — both staging swaps, the late
+        audit, and the release's cleanup."""
         orders = self._staging("orders")
         items = self._staging("order_items")
         products = self._staging("products")
 
         complete = setops.complete_order_groups(orders, items, products).cache()
-        has_complete = complete.limit(1).count() > 0
+        stage = [complete.count]
 
-        late_enriched = None
         late = None
-        late_ids = None
         silver_path = self._path("silver", "enriched")
+        late_tmp = self._path("staging", "_late_release__tmp")
         commit.recover(silver_path)
         if os.path.isdir(silver_path):
+            # a cycle's one read of all of silver: an orphan item's order
+            # may sit on any date
             silver_orders = (
                 self.spark.read.parquet(silver_path)
                 .select("order_id", "user_id", "status", "order_date")
@@ -217,19 +279,22 @@ class MedallionPipeline:
                 )
             )
             # MUST be fully materialized BEFORE the silver merge below:
-            # this frame reads the silver parquet, which merge() swaps
-            # out from under any lazy re-evaluation. A cache/persist is
-            # NOT enough on a real cluster (executor loss recomputes the
-            # lineage against the already-swapped directory), so write
-            # to a temp parquet and re-read: the frame's provenance is
-            # then the temp files, immune to the swap (r6 ADVICE fix).
-            late_tmp = self._path("staging", "_late_release__tmp")
-            late.write.mode("overwrite").parquet(late_tmp)
+            # this frame reads the silver parquet, which merge() rewrites
+            # under any lazy re-evaluation. A cache/persist is NOT enough
+            # on a real cluster (executor loss recomputes the lineage
+            # against the rewritten directory), so write to a temp parquet
+            # and re-read: the frame's provenance is then the temp files,
+            # immune to the merge (r6 ADVICE fix).
+            stage.append(functools.partial(late.write.mode("overwrite").parquet, late_tmp))
+        # stage 2: both branches read only pre-merge state
+        n_complete = _concurrently(self.spark, *stage)[0]
+
+        late_enriched = None
+        late_ids = None
+        if late is not None:
             # an empty result may leave a part-file-less directory —
             # glob before read instead of leaning on reader tolerance
-            import glob as _glob
-
-            late_files = _glob.glob(os.path.join(late_tmp, "*.parquet")) or _glob.glob(
+            late_files = glob.glob(os.path.join(late_tmp, "*.parquet")) or glob.glob(
                 os.path.join(late_tmp, "part-*")
             )
             # r18 (VERDICT r17 #6): row count from the just-written
@@ -241,8 +306,8 @@ class MedallionPipeline:
             late_rows = sum(
                 _pq.ParquetFile(f).metadata.num_rows for f in late_files
             )
-            late = self.spark.read.parquet(late_tmp) if late_files else None
-            if late is not None and late_rows > 0:
+            if late_rows > 0:
+                late = self.spark.read.parquet(late_tmp)
                 # first-item-per-pair (silver PK contract): two late
                 # items for the SAME (order_id, product_id) in one wave
                 # would be an ambiguous multi-source MERGE — keep the
@@ -256,17 +321,15 @@ class MedallionPipeline:
                 )
                 late_ids = late.select(F.col("_item_id").alias("id")).distinct()
             else:
-                import shutil
-
                 late = None
                 shutil.rmtree(late_tmp, ignore_errors=True)
 
-        if not has_complete and late_enriched is None:
+        if n_complete == 0 and late_enriched is None:
             complete.unpersist()
-            return []
+            return None
 
         parts_frames = []
-        if has_complete:
+        if n_complete:
             rel_orders = orders.join(complete, "order_id", "left_semi")
             # first-item-per-pair BEFORE enrichment: the silver MERGE
             # keys on (order_id, product_id) (reference transform.py:
@@ -287,23 +350,16 @@ class MedallionPipeline:
         enriched = parts_frames[0]
         for extra in parts_frames[1:]:
             enriched = enriched.unionByName(extra)
-        # the enriched frame is consumed by THREE actions per cycle
-        # (partition enumeration, the MERGE's source-uniqueness check,
-        # the MERGE write itself) — persist so the joins + dedup window
-        # run once, not three times (r9 ADVICE). All three actions
-        # complete before the staging swaps below, so a cache-miss
-        # recompute can never observe a swapped directory.
+        # stage 3: the MERGE consumes the enriched frame three times
+        # (source-uniqueness check, partition enumeration, the write) —
+        # persist so the joins + dedup window run once (r9 ADVICE). The
+        # MERGE names the touched dates itself. A backfill past the
+        # enumeration cap returns None and the gold refresh degrades to
+        # a full recompute — the right plan when most partitions change.
         enriched = enriched.persist()
-
-        # bounded enumeration (r3 VERDICT watch item): a normal release
-        # touches a few dates; a historical backfill past the cap returns
-        # None and the gold refresh degrades to a full recompute — the
-        # right plan anyway when most partitions are being rewritten
-        parts = upsert.enumerate_partitions(enriched, "order_date")
-        dates = None if parts is None else [str(v) for v in parts]
-        upsert.merge(
+        dates = upsert.merge(
             self.spark,
-            self._path("silver", "enriched"),
+            silver_path,
             enriched,
             keys=list(schemas.ENRICHED_MERGE_KEYS),
             partition_col=schemas.ENRICHED_PARTITION_COLUMN,
@@ -323,23 +379,27 @@ class MedallionPipeline:
         # orders before writing items would point a live plan at deleted
         # files. All reads happen against pre-swap directories.
         tables = (("orders", remaining_orders), ("order_items", remaining_items))
-        for table, remaining in tables:
-            remaining.write.mode("overwrite").parquet(
-                commit.next_path(self._path("staging", table))
+        staging_writes = [
+            functools.partial(
+                remaining.write.mode("overwrite").parquet,
+                commit.next_path(self._path("staging", table)),
             )
-        for table, _ in tables:
-            commit.swap(self._path("staging", table))
-        complete.unpersist()
-        if late_enriched is not None:
-            self._record_late_audit(late_enriched)
-        enriched.unpersist()
-        if late is not None:
-            # every consumer of the temp-materialized late frame has run
-            # its action (silver merge + staging rewrites) — safe to drop
-            import shutil
+            for table, remaining in tables
+        ]
 
-            shutil.rmtree(late_tmp, ignore_errors=True)
-        return dates
+        def drain() -> None:
+            for table, _ in tables:
+                commit.swap(self._path("staging", table))
+            complete.unpersist()
+            if late_enriched is not None:
+                self._record_late_audit(late_enriched)
+            enriched.unpersist()
+            if late is not None:
+                # every consumer of the temp-materialized late frame has
+                # run its action (silver merge + staging rewrites)
+                shutil.rmtree(late_tmp, ignore_errors=True)
+
+        return dates, staging_writes, drain
 
     def _record_late_audit(self, late_released: DataFrame) -> None:
         """Per-date running count of rows absorbed via the LATE-RELEASE
@@ -380,40 +440,67 @@ class MedallionPipeline:
         silver and MERGE into gold. Exact countDistinct per affected
         daily partition — correct under replays AND late releases, since
         the recompute always reads the full (merged) silver partition.
+        Only those partitions' directories are read, and the two merges
+        run concurrently.
 
         ``dates=None`` means a backfill-scale release touched more than
         the enumeration cap: recompute gold over ALL silver partitions
         (a full refresh is the right plan when most partitions changed);
         ``[]`` means nothing was released — no-op."""
+        with self._gold_merges(dates) as merges:
+            _concurrently(self.spark, *merges)
+
+    @contextlib.contextmanager
+    def _gold_merges(self, dates: list[str] | None):
+        """The two gold KPI merges of :meth:`refresh_gold` as independent
+        branches over one cached read of the touched silver partitions,
+        which is released when the block exits."""
         if dates is not None and not dates:
+            yield []
             return
-        silver = self.spark.read.parquet(self._path("silver", "enriched"))
-        if dates is not None:
-            silver = silver.filter(F.col("order_date").isin(dates))
-        silver = silver.cache()
+        silver = upsert.read_partitions(
+            self.spark, self._path("silver", "enriched"),
+            schemas.ENRICHED_PARTITION_COLUMN, dates, "date",
+        ).cache()
         merge = versioned.merge_versioned if self.versioned_gold else upsert.merge
         # both KPI frames are aggregations whose groupBy keys ARE the
         # merge keys — key-unique by plan shape, so the per-merge
         # uniqueness-check job is skipped (explicit opt-in; see
         # upsert.merge)
-        for table, kpi, keys in (
-            ("category_kpis", kpis.category_kpis, ["category", "order_date"]),
-            ("order_kpis_daily", kpis.order_kpis_daily, ["order_date"]),
-        ):
-            merge(
-                self.spark, self._path("gold", table), kpi(silver), keys=keys,
-                on_duplicate_source="unique_by_construction",
-            )
-        silver.unpersist()
+        try:
+            yield [
+                functools.partial(
+                    merge, self.spark, self._path("gold", table), kpi(silver),
+                    keys=keys, on_duplicate_source="unique_by_construction",
+                )
+                for table, kpi, keys in (
+                    ("category_kpis", kpis.category_kpis, ["category", "order_date"]),
+                    ("order_kpis_daily", kpis.order_kpis_daily, ["order_date"]),
+                )
+            ]
+        finally:
+            silver.unpersist()
 
     # -- one end-to-end cycle ------------------------------------------------
-    def run_cycle(self) -> list[str]:
+    def run_cycle(self) -> list[str] | None:
         """Ingest every pending file, promote complete groups, refresh
-        gold. Re-running with no new files is a no-op (checkpoint skips
-        seen files; merges are idempotent)."""
+        gold: the staged DAG of the module docstring. The same code as
+        :meth:`promote_complete_groups` then :meth:`refresh_gold`, but
+        gold commits BEFORE staging drains — both gold merges run beside
+        the two staging ``__next`` writes, and the staging swaps, late
+        audit and cycle row follow. A crash before the swaps re-releases
+        the same groups on restart, so gold always converges to the KPIs
+        of silver. Re-running with no new files is a no-op (checkpoint
+        skips seen files; merges are idempotent). Returns the released
+        order_dates (None past the enumeration cap)."""
         self.ingest_available()
-        dates = self.promote_complete_groups()
-        self.refresh_gold(dates)
+        release = self._release()
+        dates = []
+        if release is not None:
+            dates, staging_writes, drain = release
+            with self._gold_merges(dates) as merges:
+                _concurrently(self.spark, *merges, *staging_writes)
+            drain()
         self._record_cycle(dates)
         return dates
 

@@ -815,6 +815,100 @@ def test_backfill_scale_release_full_gold_refresh(spark, tmp_path, monkeypatch):
     assert any(r.released_dates is None for r in hist)
 
 
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
+def test_gold_crash_before_staging_drain_reconverges(spark, tmp_path, monkeypatch):
+    """Exactly-once end to end: gold commits BEFORE staging drains. A
+    crash while committing gold/order_kpis_daily leaves the released
+    groups in staging, so the restarted cycle re-releases them into the
+    idempotent MERGE and gold recompute: both gold tables end equal to
+    the KPIs of silver. (Draining staging first would leave that gold
+    table stale for good — the restart would release nothing.)"""
+    from lab6_real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
+        commit,
+        kpis,
+    )
+
+    root = str(tmp_path)
+    pipe = MedallionPipeline(spark, root)
+    _drop(root, "orders", "o1.csv", ORDER_HEADER, [f"o1,u1,delivered,{T0},,,,1"])
+    _drop(root, "order_items", "i1.csv", ITEM_HEADER,
+          [f"i1,o1,u1,p1,delivered,{T0},,,,10.0"])
+    _drop(root, "products", "p1.csv", PRODUCT_HEADER,
+          ["p1,sku1,5.0,cat_a,widget,acme,12.0,d1"])
+    assert pipe.run_cycle() == ["2024-03-01"]
+
+    _drop(root, "orders", "o2.csv", ORDER_HEADER,
+          ["o2,u2,delivered,2024-03-02T10:00:00,,,,1"])
+    _drop(root, "order_items", "i2.csv", ITEM_HEADER,
+          ["i2,o2,u2,p1,returned,2024-03-02T10:00:00,,,,7.0"])
+    gold_daily = pipe._path("gold", "order_kpis_daily")
+    real = commit._rename
+
+    def rename(src, dst):
+        if gold_daily in (src, dst):
+            raise RuntimeError("crash while committing gold")
+        real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(commit, "_rename", rename)
+        with pytest.raises(RuntimeError, match="crash while committing gold"):
+            pipe.run_cycle()
+    spark.catalog.clearCache()  # a crash takes the driver's cached frames with it
+
+    pipe.run_cycle()
+    silver = pipe.silver()
+    assert silver.count() == 2
+    for table, kpi in (("category_kpis", kpis.category_kpis),
+                       ("order_kpis_daily", kpis.order_kpis_daily)):
+        assert _sorted_rows(pipe.gold(table)) == _sorted_rows(kpi(silver)), table
+
+
+def test_cycle_lists_silver_partitions_once(spark, tmp_path):
+    """Past Spark's parallel-listing threshold (32 directories) every
+    read of all of silver is a 'Listing leaf files' job with a task per
+    partition. A cycle touching 2 dates runs at most 1 such job — the
+    late path's read of all of silver: the MERGE's target read and the
+    gold recompute list only the touched partitions' directories."""
+    root = str(tmp_path)
+    pipe = MedallionPipeline(spark, root)
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=d) for d in range(34)]
+    _drop(root, "orders", "base.csv", ORDER_HEADER,
+          [f"o{i},u{i},delivered,{d}T10:00:00,,,,1" for i, d in enumerate(days)])
+    _drop(root, "order_items", "base.csv", ITEM_HEADER,
+          [f"i{i},o{i},u{i},p1,delivered,{d}T10:00:00,,,,10.0"
+           for i, d in enumerate(days)])
+    _drop(root, "products", "p1.csv", PRODUCT_HEADER,
+          ["p1,sku1,5.0,cat_a,widget,acme,12.0,d1"])
+    pipe.run_cycle()
+    partitions = [n for n in os.listdir(pipe._path("silver", "enriched"))
+                  if n.startswith("order_date=")]
+    assert len(partitions) == 34
+
+    touched = days[-2:]
+    _drop(root, "orders", "new.csv", ORDER_HEADER,
+          [f"n{i},u{i},delivered,{d}T11:00:00,,,,1" for i, d in enumerate(touched)])
+    _drop(root, "order_items", "new.csv", ITEM_HEADER,
+          [f"j{i},n{i},u{i},p1,delivered,{d}T11:00:00,,,,5.0"
+           for i, d in enumerate(touched)])
+    sc = spark.sparkContext._jsc.sc()
+    lo = int(sc.dagScheduler().nextJobId())
+    assert sorted(pipe.run_cycle()) == [str(d) for d in touched]
+    hi = int(sc.dagScheduler().nextJobId())
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    listing = 0
+    for j in range(lo, hi):
+        desc = store.job(j).description()
+        listing += desc.isDefined() and str(desc.get()).startswith(
+            "Listing leaf files and directories")
+    assert listing <= 1
+    daily = {str(r.order_date): r.total_orders for r in pipe.gold("order_kpis_daily").collect()}
+    assert daily == {str(d): 2 if d in touched else 1 for d in days}
+
+
 def test_session_tracker_fold_logic():
     """The SessionTracker's per-key fold (inline close on gap, state
     update, stale-timer guard) tested against fake state/handle objects

@@ -232,3 +232,54 @@ def test_merge_unique_by_construction_skips_check_same_result(spark, tmp_path):
         upsert.merge(
             spark, p2, agg, keys=["k"], on_duplicate_source="nonsense"
         )
+
+
+def test_partitioned_merge_reads_null_and_escaped_partitions(spark, tmp_path):
+    """The partitioned MERGE reads only the touched partitions' directories,
+    named as Spark names them: a null value lives in
+    ``__HIVE_DEFAULT_PARTITION__`` and ``a/b`` / ``x=y`` are escaped. Every
+    untouched row, inside a touched partition or not, survives, and the
+    result equals the merge over the whole table (dict semantics); a
+    merge touching only new partitions keeps the table's column order."""
+    target = str(tmp_path / "t")
+    schema = "k string, d string, v int"
+    keys = ["k"]
+    rows = [("k1", None, 1), ("k2", None, 2), ("k3", "a/b", 3), ("k4", "a/b", 4),
+            ("k5", "x=y", 5), ("k6", "plain", 6)]
+    upsert.merge(spark, target, spark.createDataFrame(rows, schema), keys, partition_col="d")
+    assert {"d=__HIVE_DEFAULT_PARTITION__", "d=a%2Fb", "d=x%3Dy"} <= set(os.listdir(target))
+    columns = spark.read.parquet(target).columns
+
+    want = {k: (d, v) for k, d, v in rows}
+    for src in (
+        [("k1", None, 10), ("k7", None, 7), ("k3", "a/b", 30), ("k8", "x=y", 8)],
+        [("k9", "new", 9)],
+    ):
+        touched = upsert.merge(
+            spark, target, spark.createDataFrame(src, schema), keys, partition_col="d"
+        )
+        assert sorted(touched, key=str) == sorted({d for _, d, _ in src}, key=str)
+        want.update({k: (d, v) for k, d, v in src})
+        got = spark.read.parquet(target)
+        assert got.columns == columns
+        assert sorted(tuple(r) for r in got.select("k", "d", "v").collect()) == sorted(
+            (k, d, v) for k, (d, v) in want.items()
+        )
+
+
+def test_partitioned_merge_leaves_session_conf_unchanged(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option: a partitioned
+    MERGE (first write and update) sets nothing on the session, so
+    concurrent writers in one session never race on a shared setting."""
+    before = spark.conf.getAll
+    target = str(tmp_path / "t")
+    upsert.merge(spark, target, _df(spark, [("o1", "p1", "2024-01-01", 1.0)]),
+                 ["order_id", "product_id"], partition_col="order_date")
+    upsert.merge(spark, target, _df(spark, [("o1", "p1", "2024-01-01", 2.0),
+                                            ("o2", "p1", "2024-01-02", 3.0)]),
+                 ["order_id", "product_id"], partition_col="order_date")
+    assert spark.conf.getAll == before
+    got = spark.read.parquet(target).collect()
+    assert sorted((str(r.order_date), r.order_id, r.sale_price) for r in got) == [
+        ("2024-01-01", "o1", 2.0), ("2024-01-02", "o2", 3.0)
+    ]
