@@ -11,9 +11,10 @@ the state after a crash decidable from the listing alone:
     (c) before __old is removed   <path> + __old   -> drop __old (new rows)
 
 :func:`recover` must never run between the ``__next`` write and the
-swap. Readers that can run before the next writer call it too. Pointer
-and marker files commit through :func:`write_text_atomic`. Every rename
-goes through :func:`_rename`, the protocol's one fault point.
+swap. Readers that can run before the next writer call it too. Pointer,
+marker and single-file appends commit through :func:`write_text_atomic`.
+Every rename goes through :func:`_rename`, the protocol's one fault
+point.
 """
 
 from __future__ import annotations
@@ -55,10 +56,13 @@ def recover(path: str) -> None:
         shutil.rmtree(p, ignore_errors=True)
 
 
-def write_text_atomic(path: str, text: str) -> None:
-    """Replace the file ``path`` with ``text``: readers see the old
-    content or the new, never a partial file."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
+def write_text_atomic(path: str, data: str | bytes) -> None:
+    """Replace the file ``path`` with ``data`` (text or bytes): readers
+    see the old content or the new, never a partial file. The temp
+    file's name starts with ``.``, which Spark's listing skips, so one
+    a crash leaves behind in a table directory is never read as data."""
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f".{tail}.tmp")
+    with open(tmp, "wb" if isinstance(data, bytes) else "w") as f:
+        f.write(data)
     _rename(tmp, path)

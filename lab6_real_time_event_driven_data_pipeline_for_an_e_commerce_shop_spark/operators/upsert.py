@@ -17,17 +17,24 @@ This container has no delta-spark package, so the engine provides:
    rewritten, in place by Spark's dynamic partition overwrite (the rest
    are untouched — never rewrite 100 TB for a daily increment).
 
+Every read of a table the engine wrote goes through :func:`read_table`:
+its schema comes from a parquet footer on the driver, never from a
+Spark inference job or from partition directory names.
+
 Idempotence contract (FIXTURES.md §3 case 8): running the same source
 batch twice leaves the table byte-identical.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 from . import commit
 
@@ -50,20 +57,106 @@ PARTITION_ENUM_CAP = 1024
 
 
 def enumerate_partitions(
-    df: DataFrame, col: str, cap: int | None = None
+    df: DataFrame, col: str, cap: int | None = None,
+    unique_keys: list[str] | None = None,
 ) -> list[str | None] | None:
     """Distinct values of ``col`` as a driver-side list of their string
     casts — the text Spark names partition directories from (a date
     reads ``'2024-03-01'``) — or None when more than ``cap`` (default:
     the module-level PARTITION_ENUM_CAP, resolved at call time so tests
     can shrink it) values are touched. The collect itself is bounded
-    (limit cap+1), so the driver never materializes an unbounded list."""
+    (cap+1 values), so the driver never materializes an unbounded list.
+
+    With ``unique_keys``, the same aggregation also checks that ``df``
+    holds one row per key and raises like :func:`check_source_unique`:
+    the silver MERGE's key check and partition list in one job."""
     if cap is None:
         cap = PARTITION_ENUM_CAP
-    rows = df.select(F.col(col).cast("string")).distinct().limit(cap + 1).collect()
-    if len(rows) > cap:
-        return None
-    return [r[0] for r in rows]
+    value = F.col(col).cast("string")
+    if unique_keys is None:
+        rows = df.select(value).distinct().limit(cap + 1).collect()
+        if len(rows) > cap:
+            return None
+        return [r[0] for r in rows]
+    # a key with one row has one partition value, so first() is exact
+    # whenever the check passes
+    per_key = df.groupBy(*unique_keys).agg(
+        F.count(F.lit(1)).alias("_n"), F.first(value).alias("_v")
+    )
+    [row] = per_key.agg(
+        F.max("_n").alias("_n"),
+        F.max_by(F.struct(*unique_keys), "_n").alias("_key"),
+        # collect_set drops nulls; the struct keeps the null partition
+        F.slice(F.collect_set(F.struct("_v")), 1, cap + 1).alias("_vs"),
+    ).collect()
+    if (row["_n"] or 0) > 1:
+        _raise_duplicate_key(row["_key"].asDict())
+    values = [v["_v"] for v in row["_vs"]]
+    return None if len(values) > cap else values
+
+
+# Spark's parquet writer stores the written frame's schema in every data
+# file's footer under this key
+_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# more root paths than this in one parquet() call run Spark's
+# parallel-listing job (parallelPartitionDiscovery.threshold's default)
+_MAX_ROOTS = 32
+
+
+def _newest_data_file(dirs: list[str]) -> str:
+    """The most recently written data file in ``dirs``. Names starting
+    with ``_`` or ``.`` (markers, checksums, temp files) are not data,
+    as in Spark's own listing."""
+    newest = None
+    for d in dirs:
+        for e in os.scandir(d):
+            if e.is_file() and not e.name.startswith(("_", ".")):
+                stamp = e.stat().st_mtime_ns
+                if newest is None or stamp > newest[0]:
+                    newest = (stamp, e.path)
+    if newest is None:
+        raise FileNotFoundError(f"no data files under {dirs}")
+    return newest[1]
+
+
+def read_table(
+    spark: SparkSession, path: str, partition_col: str | None = None,
+    dtype: DataType | str = "string", dirs: list[str] | None = None,
+) -> DataFrame:
+    """The table the engine wrote at ``path``, read with its declared
+    schema and without a Spark job before the read's own.
+
+    The column types are the Spark row schema in the footer of the
+    table's NEWEST data file, read with pyarrow on the driver. Every
+    MERGE writes the target's columns plus the source's, so a table's
+    schema only widens, and its newest file carries all of it: the
+    partitions a read skips cannot hold a column that file lacks. The
+    partition column ``partition_col`` is added as ``dtype``, so its
+    type never depends on the values in the directory names (a string
+    holding ``2024-01-01`` stays a string; null is
+    ``__HIVE_DEFAULT_PARTITION__``).
+
+    ``dirs`` restricts the read to those partition directories (default:
+    all). At most 32 root paths go to one ``parquet()`` call, and the
+    chunks are unioned: more would run Spark's parallel-listing job."""
+    parts = sorted(
+        e.path for e in os.scandir(path)
+        if e.is_dir() and e.name.startswith(partition_col + "=")
+    ) if partition_col else []
+    footer = pq.read_metadata(_newest_data_file(parts or [path])).metadata
+    schema = StructType.fromJson(json.loads(footer[_ROW_SCHEMA_KEY]))
+    roots = [path]
+    if partition_col:
+        schema.add(partition_col, dtype)
+        roots = parts if dirs is None else dirs
+    reader = spark.read.schema(schema).option("basePath", path)
+    chunks = [
+        reader.parquet(*roots[i:i + _MAX_ROOTS])
+        for i in range(0, len(roots), _MAX_ROOTS)
+    ]
+    if not chunks:
+        return spark.createDataFrame([], schema)
+    return functools.reduce(DataFrame.unionByName, chunks)
 
 
 def read_partitions(
@@ -71,30 +164,30 @@ def read_partitions(
     dtype: DataType | str,
 ) -> DataFrame:
     """The rows of the table at ``path`` whose partition column ``col``
-    has one of ``values`` (string casts, as :func:`enumerate_partitions`
-    returns them), reading only those partitions' directories — never a
-    listing of the whole table. Directory names are Spark's own
-    rendering (escaped value, ``__HIVE_DEFAULT_PARTITION__`` for null);
-    ``col`` is cast back to ``dtype``, because Spark infers its type from
-    the names of the directories read (a null-only read is NullType).
-    When none of them exists yet, one other partition gives the schema
-    and no rows.
+    (declared type ``dtype``) has one of ``values`` (string casts, as
+    :func:`enumerate_partitions` returns them), through
+    :func:`read_table` over only those partitions' directories — never
+    a listing of the whole table. Directory names are Spark's own
+    rendering (escaped value, ``__HIVE_DEFAULT_PARTITION__`` for null).
+    Values without a directory yet contribute no rows.
     ``values=None`` (past the enumeration cap) reads the whole table."""
     if values is None:
-        return spark.read.parquet(path)
+        return read_table(spark, path, col, dtype)
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     dirs = dict.fromkeys(  # '' and null share Spark's default partition
         os.path.join(path, utils.getPartitionPathString(col, v)) for v in values
     )
-    found = [d for d in dirs if os.path.isdir(d)]
-    reader = spark.read.option("basePath", path)
-    if found:
-        df = reader.parquet(*found)
-    else:
-        other = [e.path for e in os.scandir(path)
-                 if e.is_dir() and e.name.startswith(col + "=")][:1]
-        df = reader.parquet(*(other or [path])).where(F.lit(False))
-    return df.withColumn(col, F.col(col).cast(dtype))
+    return read_table(
+        spark, path, col, dtype, [d for d in dirs if os.path.isdir(d)]
+    )
+
+
+def _raise_duplicate_key(vals: dict) -> None:
+    raise ValueError(
+        f"MERGE source has multiple rows for key {vals}; sources must "
+        "be key-unique (dedupe upstream, e.g. first-line-number per "
+        "pair) or pass on_duplicate_source='dedupe' explicitly"
+    )
 
 
 def check_source_unique(source: DataFrame, keys: list[str]) -> None:
@@ -121,18 +214,13 @@ def check_source_unique(source: DataFrame, keys: list[str]) -> None:
         .collect()
     )
     if dup:
-        vals = {k: dup[0][k] for k in keys}
-        raise ValueError(
-            f"MERGE source has multiple rows for key {vals}; sources must "
-            "be key-unique (dedupe upstream, e.g. first-line-number per "
-            "pair) or pass on_duplicate_source='dedupe' explicitly"
-        )
+        _raise_duplicate_key({k: dup[0][k] for k in keys})
 
 
 def resolve_duplicates(
     source: DataFrame, keys: list[str], on_duplicate_source: str
 ) -> DataFrame:
-    """The one ``on_duplicate_source`` dispatch of every MERGE path:
+    """The ``on_duplicate_source`` dispatch of the MERGE paths:
     "error" raises on a duplicate key (:func:`check_source_unique`);
     "dedupe" keeps one row per key, the highest md5 of the JSON non-key
     payload — a winner by CONTENT, so identical runs write identical
@@ -193,13 +281,18 @@ def merge_parquet(
     overwrite) — incremental cost proportional to the increment, not the
     table.
 
-    ``on_duplicate_source``: see :func:`resolve_duplicates`.
+    ``on_duplicate_source``: see :func:`resolve_duplicates`. With a
+    partition column, "error" checks the keys in the aggregation that
+    lists the touched partitions (:func:`enumerate_partitions`).
 
     Returns the partitions the source touches (:func:`enumerate_partitions`;
     None past the cap or without ``partition_col``).
     """
-    source = resolve_duplicates(source, keys, on_duplicate_source)
-    parts = enumerate_partitions(source, partition_col) if partition_col else None
+    if partition_col and on_duplicate_source == "error":
+        parts = enumerate_partitions(source, partition_col, unique_keys=keys)
+    else:
+        source = resolve_duplicates(source, keys, on_duplicate_source)
+        parts = enumerate_partitions(source, partition_col) if partition_col else None
     commit.recover(target_path)
     if not os.path.exists(target_path):
         writer = source.write.mode("overwrite")
@@ -221,18 +314,18 @@ def merge_parquet(
         return merged.select(cols)
 
     if partition_col:
+        dtype = source.schema[partition_col].dataType
         if parts is not None:
-            target = read_partitions(
-                spark, target_path, partition_col, parts,
-                source.schema[partition_col].dataType,
-            )
+            target = read_partitions(spark, target_path, partition_col, parts, dtype)
         else:
             # backfill scale (> cap partitions touched): scope the target
-            # read with a broadcast semi-join on the partition column —
-            # dynamic partition pruning, no driver-side list at all
-            target = spark.read.parquet(target_path).join(
-                F.broadcast(source.select(partition_col).distinct()),
-                partition_col,
+            # read with a broadcast semi-join on the partition column, no
+            # driver-side list at all. Null-safe: the rows of the null
+            # partition must match, or its overwrite would drop them
+            touched = source.select(F.col(partition_col).alias("_p")).distinct()
+            target = read_table(spark, target_path, partition_col, dtype).join(
+                F.broadcast(touched),
+                F.col(partition_col).eqNullSafe(F.col("_p")),
                 "left_semi",
             )
         kept = target.join(source.select(keys), keys, "left_anti")
@@ -253,7 +346,7 @@ def merge_parquet(
         )
         return parts
 
-    target = spark.read.parquet(target_path)
+    target = read_table(spark, target_path)
     kept = target.join(source.select(keys), keys, "left_anti")
     merged = _stable_order(target, kept.unionByName(source, allowMissingColumns=True))
     merged.write.mode("overwrite").parquet(commit.next_path(target_path))

@@ -43,26 +43,41 @@ the Spark actions inside a stage are independent and run concurrently:
 
     1. ingest        the three availableNow streams
     2. gate          materialize the complete groups ‖ the late-path temp
-    3. silver        materialize the release, then the silver MERGE
-    4. gold+staging  both gold KPI merges ‖ both staging ``__next`` writes
-    5. drain         swap both staging dirs, late audit, cycle row
+    3. silver        the silver MERGE (one aggregation materializes the
+                     release, checks its keys and lists the touched
+                     dates) ‖ both staging ``__next`` writes ‖ the late
+                     audit's ``__next`` write
+    4. gold          both gold KPI merges
+    5. drain         swap both staging dirs, then the audit's; the cycle
+                     row, written on the driver
 
 Commit order is silver → gold → staging swaps → audit. Until the swaps,
 staging still holds the released groups, so a crash anywhere before
 them re-releases the same groups into the idempotent MERGE and gold
 recompute on restart: gold can never stay stale behind a drained
-staging.
+staging. The audit's ``__next`` is a rewrite of a committed table, so
+the next ``recover`` drops it unless the drain swapped it in: a crash
+before its swap loses the cycle's late count, never counts it twice.
+
+No stage runs a Spark job only for metadata: every read of an
+engine-written table takes its schema from a parquet footer and passes
+at most 32 root paths per ``parquet()`` call (``upsert.read_table``), so
+none infers a schema or lists files in a Spark job.
 """
 
 from __future__ import annotations
 
 import contextlib
+import datetime
 import functools
 import glob
 import os
 import shutil
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -225,18 +240,18 @@ class MedallionPipeline:
         release = self._release()
         if release is None:
             return []
-        dates, staging_writes, drain = release
-        _concurrently(self.spark, *staging_writes)
+        dates, drain = release
         drain()
         return dates
 
     def _release(self):
         """Stages 2-3 of a cycle: the completeness gate and the late path,
-        then the silver MERGE. Returns None when nothing releases, else
-        ``(dates, staging_writes, drain)``: the touched order_dates, the
-        two staging ``__next`` writes (independent branches), and the
-        drain that must follow them — both staging swaps, the late
-        audit, and the release's cleanup."""
+        then the silver MERGE beside the ``__next`` writes of both staging
+        tables and, after a late release, of the late audit (none of them
+        reads silver). Returns None when nothing releases, else
+        ``(dates, drain)``: the touched order_dates and the drain that
+        commits those writes — the swaps in commit order — and cleans
+        up the release."""
         orders = self._staging("orders")
         items = self._staging("order_items")
         products = self._staging("products")
@@ -252,7 +267,9 @@ class MedallionPipeline:
             # a cycle's one read of all of silver: an orphan item's order
             # may sit on any date
             silver_orders = (
-                self.spark.read.parquet(silver_path)
+                upsert.read_table(
+                    self.spark, silver_path, schemas.ENRICHED_PARTITION_COLUMN, "date"
+                )
                 .select("order_id", "user_id", "status", "order_date")
                 .distinct()
             )
@@ -301,13 +318,11 @@ class MedallionPipeline:
             # files' parquet FOOTERS — a driver-side metadata read
             # replaces the late.count() Spark job each cycle (the same
             # fact, from the same files)
-            import pyarrow.parquet as _pq
-
             late_rows = sum(
-                _pq.ParquetFile(f).metadata.num_rows for f in late_files
+                pq.ParquetFile(f).metadata.num_rows for f in late_files
             )
             if late_rows > 0:
-                late = self.spark.read.parquet(late_tmp)
+                late = self.spark.read.schema(late.schema).parquet(late_tmp)
                 # first-item-per-pair (silver PK contract): two late
                 # items for the SAME (order_id, product_id) in one wave
                 # would be an ambiguous multi-source MERGE — keep the
@@ -350,14 +365,15 @@ class MedallionPipeline:
         enriched = parts_frames[0]
         for extra in parts_frames[1:]:
             enriched = enriched.unionByName(extra)
-        # stage 3: the MERGE consumes the enriched frame three times
-        # (source-uniqueness check, partition enumeration, the write) —
-        # persist so the joins + dedup window run once (r9 ADVICE). The
-        # MERGE names the touched dates itself. A backfill past the
-        # enumeration cap returns None and the gold refresh degrades to
-        # a full recompute — the right plan when most partitions change.
+        # stage 3: the MERGE consumes the enriched frame twice (the key
+        # check + partition enumeration, the write) — persist so the
+        # joins + dedup window run once (r9 ADVICE). The MERGE names the
+        # touched dates itself. A backfill past the enumeration cap
+        # returns None and the gold refresh degrades to a full
+        # recompute — the right plan when most partitions change.
         enriched = enriched.persist()
-        dates = upsert.merge(
+        merge = functools.partial(
+            upsert.merge,
             self.spark,
             silver_path,
             enriched,
@@ -379,60 +395,73 @@ class MedallionPipeline:
         # orders before writing items would point a live plan at deleted
         # files. All reads happen against pre-swap directories.
         tables = (("orders", remaining_orders), ("order_items", remaining_items))
-        staging_writes = [
+        writes = [
             functools.partial(
                 remaining.write.mode("overwrite").parquet,
                 commit.next_path(self._path("staging", table)),
             )
             for table, remaining in tables
         ]
+        audit = self._path("gold", "late_audit")
+        if late_enriched is not None:
+            writes.append(functools.partial(self._write_late_audit, audit, late_enriched))
+        dates = _concurrently(self.spark, merge, *writes)[0]
 
         def drain() -> None:
             for table, _ in tables:
                 commit.swap(self._path("staging", table))
-            complete.unpersist()
             if late_enriched is not None:
-                self._record_late_audit(late_enriched)
+                self._record_late_audit(audit)
+            complete.unpersist()
             enriched.unpersist()
             if late is not None:
                 # every consumer of the temp-materialized late frame has
-                # run its action (silver merge + staging rewrites)
+                # run its action (silver merge, staging and audit writes)
                 shutil.rmtree(late_tmp, ignore_errors=True)
 
-        return dates, staging_writes, drain
+        return dates, drain
 
-    def _record_late_audit(self, late_released: DataFrame) -> None:
-        """Per-date running count of rows absorbed via the LATE-RELEASE
-        path — the watermark/late-data contract made auditable: gold
-        aggregates already absorb late VALUES; this gold table proves
-        HOW MANY rows arrived through the late path (r8 VERDICT ask).
-        Additive MERGE keyed on order_date (source = new counts + the
-        existing row's count). Runs AFTER the staging swaps, so a crash
-        in the window UNDERCOUNTS (at-most-once) rather than
-        double-counts: once staging drained, a released item can never
-        re-release, keeping the metric convergent under replay."""
-        counts = late_released.groupBy("order_date").agg(
-            F.count(F.lit(1)).alias("late_items_absorbed")
-        )
-        path = self._path("gold", "late_audit")
+    def _write_late_audit(self, path: str, late_released: DataFrame) -> None:
+        """Stage 3: write the next state of the per-date running count of
+        rows absorbed via the LATE-RELEASE path — the watermark/late-data
+        contract made auditable: gold aggregates already absorb late
+        VALUES; this gold table proves HOW MANY rows arrived through the
+        late path (r8 VERDICT ask). The previous counts full-outer-join
+        this release's counts into ``commit.next_path(path)``;
+        :meth:`_record_late_audit` commits it after the staging swaps.
+
+        The first late release commits an empty table before that write:
+        the counted ``__next`` is then always a rewrite, which ``recover``
+        drops after a crash — a first write's ``__next`` it would restore,
+        and the groups still in staging would count a second time."""
         commit.recover(path)  # the previous counts must be read, not lost
-        if os.path.isdir(path):
-            prev = self.spark.read.parquet(path).select(
-                "order_date", F.col("late_items_absorbed").alias("_prev")
-            )
-            counts = counts.join(prev, "order_date", "left").select(
+        if not os.path.isdir(path):
+            self.spark.createDataFrame(
+                [], "order_date date, late_items_absorbed long"
+            ).write.parquet(commit.next_path(path))
+            commit.swap(path)
+        counts = late_released.groupBy("order_date").agg(
+            F.count(F.lit(1)).alias("_new")
+        )
+        (
+            upsert.read_table(self.spark, path)
+            .join(counts, "order_date", "full")
+            .select(
                 "order_date",
                 (
-                    F.col("late_items_absorbed")
-                    + F.coalesce(F.col("_prev"), F.lit(0))
+                    F.coalesce(F.col("late_items_absorbed"), F.lit(0))
+                    + F.coalesce(F.col("_new"), F.lit(0))
                 ).cast("long").alias("late_items_absorbed"),
             )
-        # counts is a groupBy(order_date) aggregate — key-unique by
-        # plan shape (r18; see upsert.merge)
-        upsert.merge(
-            self.spark, path, counts, keys=["order_date"],
-            on_duplicate_source="unique_by_construction",
+            .write.parquet(commit.next_path(path))
         )
+
+    def _record_late_audit(self, path: str) -> None:
+        """Commit the late audit written in stage 3. Runs AFTER the
+        staging swaps, so a crash in the window UNDERCOUNTS (at-most-once)
+        rather than double-counts: once staging drained, a released item
+        can never re-release, keeping the metric convergent under replay."""
+        commit.swap(path)
 
     # -- EP3b: gold KPI refresh (exact, partition-pruned) --------------------
     def refresh_gold(self, dates: list[str] | None) -> None:
@@ -486,9 +515,9 @@ class MedallionPipeline:
         """Ingest every pending file, promote complete groups, refresh
         gold: the staged DAG of the module docstring. The same code as
         :meth:`promote_complete_groups` then :meth:`refresh_gold`, but
-        gold commits BEFORE staging drains — both gold merges run beside
-        the two staging ``__next`` writes, and the staging swaps, late
-        audit and cycle row follow. A crash before the swaps re-releases
+        gold commits BEFORE staging drains — both gold merges run between
+        the release (whose staging and audit ``__next`` writes run beside
+        the silver MERGE) and the swaps, and the cycle row follows. A crash before the swaps re-releases
         the same groups on restart, so gold always converges to the KPIs
         of silver. Re-running with no new files is a no-op (checkpoint
         skips seen files; merges are idempotent). Returns the released
@@ -497,28 +526,36 @@ class MedallionPipeline:
         release = self._release()
         dates = []
         if release is not None:
-            dates, staging_writes, drain = release
+            dates, drain = release
             with self._gold_merges(dates) as merges:
-                _concurrently(self.spark, *merges, *staging_writes)
+                _concurrently(self.spark, *merges)
             drain()
         self._record_cycle(dates)
         return dates
 
     def _record_cycle(self, dates: list[str] | None) -> None:
         """Cycle audit row (reference P9, glue_job.py:263-267: batch_id +
-        timestamp trigger docs): uuid()/current_timestamp() expressions,
+        timestamp trigger docs): a uuid4 cycle_id and a UTC completed_at,
         appended to a _meta table instead of ad-hoc S3 JSON. A NULL
         released_dates array records a backfill-scale (full-refresh)
-        cycle."""
-        (
-            self.spark.range(1)
-            .select(
-                F.uuid().alias("cycle_id"),
-                F.current_timestamp().alias("completed_at"),
-                F.lit(dates).cast("array<string>").alias("released_dates"),
-            )
-            .write.mode("append")
-            .parquet(self._path("_meta", "cycles"))
+        cycle. The row is one parquet file written with pyarrow on the
+        driver (no Spark job) and committed through
+        ``commit.write_text_atomic``."""
+        cycle_id = str(uuid.uuid4())
+        row = pa.table({
+            "cycle_id": [cycle_id],
+            "completed_at": pa.array(
+                [datetime.datetime.now(datetime.timezone.utc)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            "released_dates": pa.array([dates], pa.list_(pa.string())),
+        })
+        buf = pa.BufferOutputStream()
+        pq.write_table(row, buf)
+        meta = self._path("_meta", "cycles")
+        os.makedirs(meta, exist_ok=True)
+        commit.write_text_atomic(
+            os.path.join(meta, f"part-{cycle_id}.parquet"), buf.getvalue().to_pybytes()
         )
 
     def cycle_history(self) -> DataFrame:
@@ -533,8 +570,12 @@ class MedallionPipeline:
         return self._read_committed(self._path("gold", table))
 
     def silver(self) -> DataFrame:
-        return self._read_committed(self._path("silver", "enriched"))
+        return self._read_committed(
+            self._path("silver", "enriched"), schemas.ENRICHED_PARTITION_COLUMN, "date"
+        )
 
-    def _read_committed(self, path: str) -> DataFrame:
+    def _read_committed(
+        self, path: str, partition_col: str | None = None, dtype: str = "string"
+    ) -> DataFrame:
         commit.recover(path)  # a crashed commit heals before the next cycle
-        return self.spark.read.parquet(path)
+        return upsert.read_table(self.spark, path, partition_col, dtype)

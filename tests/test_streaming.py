@@ -909,6 +909,104 @@ def test_cycle_lists_silver_partitions_once(spark, tmp_path):
     assert daily == {str(d): 2 if d in touched else 1 for d in days}
 
 
+
+def _listing_jobs(spark, run):
+    """Run ``run()`` and count the 'Listing leaf files' jobs it started,
+    read from the status store by job-id range."""
+    sc = spark.sparkContext._jsc.sc()
+    lo = int(sc.dagScheduler().nextJobId())
+    out = run()
+    hi = int(sc.dagScheduler().nextJobId())
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    listing = 0
+    for j in range(lo, hi):
+        desc = store.job(j).description()
+        listing += desc.isDefined() and str(desc.get()).startswith(
+            "Listing leaf files and directories")
+    return listing, out
+
+
+def test_cycle_with_late_item_over_33_partitions_runs_no_listing_job(spark, tmp_path):
+    """Every read of an engine-written table passes at most 32 root paths
+    per parquet() call, so a cycle over a 34-partition silver whose late
+    path reads all of it runs no 'Listing leaf files' job at all."""
+    root = str(tmp_path)
+    pipe = MedallionPipeline(spark, root)
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=d) for d in range(34)]
+    _drop(root, "orders", "base.csv", ORDER_HEADER,
+          [f"o{i},u{i},delivered,{d}T10:00:00,,,,1" for i, d in enumerate(days)])
+    _drop(root, "order_items", "base.csv", ITEM_HEADER,
+          [f"i{i},o{i},u{i},p1,delivered,{d}T10:00:00,,,,10.0"
+           for i, d in enumerate(days)])
+    _drop(root, "products", "p1.csv", PRODUCT_HEADER,
+          ["p1,sku1,5.0,cat_a,widget,acme,12.0,d1"])
+    pipe.run_cycle()
+
+    # a late item for the published o3, and a new order on the last day
+    _drop(root, "order_items", "late.csv", ITEM_HEADER,
+          [f"late3,o3,u3,p2,delivered,{days[3]}T10:00:00,,,,4.0",
+           f"n1,n1,u9,p1,delivered,{days[-1]}T11:00:00,,,,5.0"])
+    _drop(root, "orders", "new.csv", ORDER_HEADER,
+          [f"n1,u9,delivered,{days[-1]}T11:00:00,,,,1"])
+    _drop(root, "products", "p2.csv", PRODUCT_HEADER,
+          ["p2,sku2,9.0,cat_b,gadget,acme,35.0,d1"])
+    listing, dates = _listing_jobs(spark, pipe.run_cycle)
+    assert sorted(dates) == sorted([str(days[3]), str(days[-1])])
+    assert listing == 0
+    assert _late_audit(spark, root) == {str(days[3]): 1}
+    daily = {str(r.order_date): r.total_items_sold
+             for r in pipe.gold("order_kpis_daily").collect()}
+    assert daily == {str(d): 2 if d in (days[3], days[-1]) else 1 for d in days}
+
+
+def test_audit_crash_before_staging_swaps_counts_late_items_once(spark, tmp_path, monkeypatch):
+    """The late audit's __next is written beside the silver MERGE and
+    committed only after gold and the staging swaps. A crash after it is written
+    and before the swaps leaves the late items in staging: the restarted
+    cycle releases them again and counts them exactly once, for the
+    first audit (an empty table is committed before the count) and for
+    a later one."""
+    from lab6_real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
+        commit,
+    )
+
+    root = str(tmp_path)
+    pipe = MedallionPipeline(spark, root)
+    _drop(root, "orders", "o1.csv", ORDER_HEADER, [f"o1,u1,delivered,{T0},,,,3"])
+    _drop(root, "order_items", "i1.csv", ITEM_HEADER,
+          [f"i1,o1,u1,p1,delivered,{T0},,,,10.0"])
+    _drop(root, "products", "p1.csv", PRODUCT_HEADER,
+          ["p1,sku1,5.0,cat_a,widget,acme,12.0,d1"])
+    pipe.run_cycle()
+
+    audit = pipe._path("gold", "late_audit")
+    staging_orders = pipe._path("staging", "orders")
+    real = commit._rename
+
+    def rename(src, dst):
+        if staging_orders in (src, dst):
+            raise RuntimeError("crash before the staging swaps")
+        real(src, dst)
+
+    for n, item in enumerate(("i2", "i3"), start=1):
+        _drop(root, "order_items", f"late_{item}.csv", ITEM_HEADER,
+              [f"{item},o1,u1,p1{item},delivered,{T0},,,,2.0"])
+        _drop(root, "products", f"p_{item}.csv", PRODUCT_HEADER,
+              [f"p1{item},sku,1.0,cat_b,gizmo,acme,9.0,d1"])
+        with monkeypatch.context() as m:
+            m.setattr(commit, "_rename", rename)
+            with pytest.raises(RuntimeError, match="crash before the staging swaps"):
+                pipe.run_cycle()
+        assert os.path.isdir(commit.next_path(audit))  # the count was written
+        spark.catalog.clearCache()  # a crash takes the driver's cached frames with it
+        pipe.run_cycle()
+        assert _late_audit(spark, root) == {"2024-03-01": n}
+    assert pipe.silver().count() == 3
+    pipe.run_cycle()  # replay: nothing releases, nothing counts
+    assert _late_audit(spark, root) == {"2024-03-01": 2}
+
+
 def test_session_tracker_fold_logic():
     """The SessionTracker's per-key fold (inline close on gap, state
     update, stale-timer guard) tested against fake state/handle objects

@@ -283,3 +283,85 @@ def test_partitioned_merge_leaves_session_conf_unchanged(spark, tmp_path):
     assert sorted((str(r.order_date), r.order_id, r.sale_price) for r in got) == [
         ("2024-01-01", "o1", 2.0), ("2024-01-02", "o2", 3.0)
     ]
+
+
+def test_over_cap_merge_keeps_null_partition_rows(spark, tmp_path, monkeypatch):
+    """Past the enumeration cap the target is scoped by a semi-join on
+    the partition column. It is null-safe: the untouched row k2 of the
+    null partition survives its dynamic overwrite."""
+    target = str(tmp_path / "t")
+    schema = "k string, d string, v int"
+    rows = [("k1", None, 1), ("k2", None, 2), ("k3", "x", 3)]
+    upsert.merge(spark, target, spark.createDataFrame(rows, schema), ["k"], partition_col="d")
+    monkeypatch.setattr(upsert, "PARTITION_ENUM_CAP", 0)
+    touched = upsert.merge(
+        spark, target, spark.createDataFrame([("k1", None, 10)], schema), ["k"],
+        partition_col="d",
+    )
+    assert touched is None  # the over-cap branch ran
+    got = spark.read.parquet(target).select("k", "d", "v").collect()
+    assert sorted(map(tuple, got)) == [("k1", None, 10), ("k2", None, 2), ("k3", "x", 3)]
+
+
+def test_string_partition_reads_back_as_string(spark, tmp_path, monkeypatch):
+    """A string partition column holding a date-like value keeps its
+    declared type through every reader of an engine-written table: the
+    enumerated and the over-cap merge, read_partitions and the
+    pipeline's serving reader. Spark's inference alone reads it as a
+    date, because it types partition values from directory names."""
+    from lab6_real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
+        MedallionPipeline,
+    )
+
+    target = str(tmp_path / "t")
+    schema = "k string, p string, v int"
+    pipe = MedallionPipeline(spark, str(tmp_path / "pipe"))
+
+    def merge(rows):
+        upsert.merge(spark, target, spark.createDataFrame(rows, schema), ["k"],
+                     partition_col="p")
+        for df in (upsert.read_partitions(spark, target, "p", ["2024-01-01"], "string"),
+                   pipe._read_committed(target, "p", "string")):
+            assert dict(df.dtypes)["p"] == "string"
+        return sorted(map(tuple, pipe._read_committed(target, "p").select("k", "p", "v").collect()))
+
+    assert merge([("k1", "2024-01-01", 1)]) == [("k1", "2024-01-01", 1)]
+    assert merge([("k1", "2024-01-01", 10), ("k2", "2024-01-01", 2)]) == [
+        ("k1", "2024-01-01", 10), ("k2", "2024-01-01", 2)]
+    monkeypatch.setattr(upsert, "PARTITION_ENUM_CAP", 0)
+    assert merge([("k2", "2024-01-01", 20)]) == [
+        ("k1", "2024-01-01", 10), ("k2", "2024-01-01", 20)]
+
+
+def test_partitioned_schema_evolution_survives_a_narrow_merge(spark, tmp_path):
+    """A column one partition's merge added survives a later narrow merge
+    into another partition: every read takes its schema from the newest
+    data file, which carries the widest schema."""
+    target = str(tmp_path / "t")
+    narrow = "k string, p string, v int"
+    keys = ["k"]
+    upsert.merge(spark, target, spark.createDataFrame(
+        [("a", "p1", 1), ("b", "p2", 2)], narrow), keys, partition_col="p")
+    upsert.merge(spark, target, spark.createDataFrame(
+        [("c", "p2", 3, "promo")], narrow + ", extra string"), keys, partition_col="p")
+    upsert.merge(spark, target, spark.createDataFrame(
+        [("a", "p1", 10)], narrow), keys, partition_col="p")
+    got = upsert.read_table(spark, target, "p")
+    assert got.columns == ["k", "v", "extra", "p"]
+    assert sorted(map(tuple, got.collect())) == [
+        ("a", 10, None, "p1"), ("b", 2, None, "p2"), ("c", 3, "promo", "p2")]
+
+
+def test_partitioned_merge_duplicate_key_raises_with_its_values(spark, tmp_path):
+    """The partitioned MERGE checks its source's keys in the aggregation
+    that lists the touched partitions, with the unpartitioned path's
+    error: the duplicate key's values, and nothing written. A key
+    repeated across two partitions is a duplicate too."""
+    target = str(tmp_path / "t")
+    for rows in ([("o1", "p1", "2024-01-01", 1.0), ("o1", "p1", "2024-01-01", 2.0)],
+                 [("o1", "p1", "2024-01-01", 1.0), ("o1", "p1", "2024-01-02", 2.0)]):
+        with pytest.raises(ValueError, match=r"multiple rows for key "
+                           r"\{'order_id': 'o1', 'product_id': 'p1'\}"):
+            upsert.merge(spark, target, _df(spark, rows), ["order_id", "product_id"],
+                         partition_col="order_date")
+        assert not os.path.exists(target)
