@@ -893,17 +893,8 @@ def test_cycle_lists_silver_partitions_once(spark, tmp_path):
     _drop(root, "order_items", "new.csv", ITEM_HEADER,
           [f"j{i},n{i},u{i},p1,delivered,{d}T11:00:00,,,,5.0"
            for i, d in enumerate(touched)])
-    sc = spark.sparkContext._jsc.sc()
-    lo = int(sc.dagScheduler().nextJobId())
-    assert sorted(pipe.run_cycle()) == [str(d) for d in touched]
-    hi = int(sc.dagScheduler().nextJobId())
-    sc.listenerBus().waitUntilEmpty()
-    store = sc.statusStore()
-    listing = 0
-    for j in range(lo, hi):
-        desc = store.job(j).description()
-        listing += desc.isDefined() and str(desc.get()).startswith(
-            "Listing leaf files and directories")
+    listing, dates = _listing_jobs(spark, pipe.run_cycle)
+    assert sorted(dates) == [str(d) for d in touched]
     assert listing <= 1
     daily = {str(r.order_date): r.total_orders for r in pipe.gold("order_kpis_daily").collect()}
     assert daily == {str(d): 2 if d in touched else 1 for d in days}
