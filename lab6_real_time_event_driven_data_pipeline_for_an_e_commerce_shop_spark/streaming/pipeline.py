@@ -88,17 +88,21 @@ from ..operators import commit, kpis, setops, upsert, validation, versioned
 
 
 def _concurrently(spark: SparkSession, *branches) -> list:
-    """Run the stage's ``branches`` (no-argument callables) at once, one
-    thread each, returning their results in order. Each branch runs
-    through ``inheritable_thread_target``, so the caller's job group and
-    local properties follow its Spark jobs. Every branch is joined
-    before the first error propagates: a failed branch never leaves a
-    sibling still writing while the caller's recovery runs."""
+    """Run the stage's ``branches`` (no-argument callables) at once,
+    returning their results in order. The first runs on the calling
+    thread, so its spans and errors stay the caller's; the others run
+    on one pool thread each, through ``inheritable_thread_target``, so
+    the caller's job group and local properties follow their Spark
+    jobs. Every branch is joined before the first error propagates: a
+    failed branch never leaves a sibling still writing while the
+    caller's recovery runs."""
     if not branches:
         return []
-    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in branches]
-    return [f.result() for f in futures]
+    first, *rest = branches
+    with ThreadPoolExecutor(max_workers=max(len(rest), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in rest]
+        head = first()
+    return [head] + [f.result() for f in futures]
 
 
 def _first_item_per_pair(items: DataFrame, id_col: str = "id") -> DataFrame:
@@ -517,11 +521,12 @@ class MedallionPipeline:
         :meth:`promote_complete_groups` then :meth:`refresh_gold`, but
         gold commits BEFORE staging drains — both gold merges run between
         the release (whose staging and audit ``__next`` writes run beside
-        the silver MERGE) and the swaps, and the cycle row follows. A crash before the swaps re-releases
-        the same groups on restart, so gold always converges to the KPIs
-        of silver. Re-running with no new files is a no-op (checkpoint
-        skips seen files; merges are idempotent). Returns the released
-        order_dates (None past the enumeration cap)."""
+        the silver MERGE) and the swaps, and the cycle row follows. A
+        crash before the swaps re-releases the same groups on restart,
+        so gold always converges to the KPIs of silver. Re-running with
+        no new files is a no-op (checkpoint skips seen files; merges are
+        idempotent). Returns the released order_dates (None past the
+        enumeration cap)."""
         self.ingest_available()
         release = self._release()
         dates = []

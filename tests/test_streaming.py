@@ -900,7 +900,6 @@ def test_cycle_lists_silver_partitions_once(spark, tmp_path):
     assert daily == {str(d): 2 if d in touched else 1 for d in days}
 
 
-
 def _listing_jobs(spark, run):
     """Run ``run()`` and count the 'Listing leaf files' jobs it started,
     read from the status store by job-id range."""
@@ -996,6 +995,35 @@ def test_audit_crash_before_staging_swaps_counts_late_items_once(spark, tmp_path
     assert pipe.silver().count() == 3
     pipe.run_cycle()  # replay: nothing releases, nothing counts
     assert _late_audit(spark, root) == {"2024-03-01": 2}
+
+
+def test_stage_runs_first_branch_on_caller_and_joins_before_raising(spark):
+    """A stage's first branch runs on the calling thread (its traced
+    spans stay the caller's), results come back in branch order, and a
+    failing first branch still waits for its siblings to finish."""
+    import threading
+    import time
+
+    from lab6_real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
+        _concurrently,
+    )
+
+    def where():
+        return threading.current_thread() is threading.main_thread()
+
+    assert _concurrently(spark, where, where, lambda: 3) == [True, False, 3]
+    done = []
+
+    def slow():
+        time.sleep(0.2)
+        done.append(1)
+
+    def fail():
+        raise RuntimeError("first branch failed")
+
+    with pytest.raises(RuntimeError, match="first branch failed"):
+        _concurrently(spark, fail, slow)
+    assert done == [1]
 
 
 def test_session_tracker_fold_logic():
