@@ -224,7 +224,8 @@ def resolve_duplicates(
     "error" raises on a duplicate key (:func:`check_source_unique`);
     "dedupe" keeps one row per key, the highest md5 of the JSON non-key
     payload — a winner by CONTENT, so identical runs write identical
-    tables; "unique_by_construction" skips the check (see :func:`merge`)."""
+    tables; "unique_by_construction" skips the check job but raises
+    unless the plan shape proves it (:func:`_grouped_exactly_on`)."""
     if on_duplicate_source == "error":
         check_source_unique(source, keys)
     elif on_duplicate_source == "dedupe":
@@ -241,9 +242,38 @@ def resolve_duplicates(
             .filter(F.col("_dup_rn") == 1)
             .drop("_dup_rn")
         )
-    elif on_duplicate_source != "unique_by_construction":
+    elif on_duplicate_source == "unique_by_construction":
+        if not _grouped_exactly_on(source, keys):
+            raise ValueError(
+                "on_duplicate_source='unique_by_construction' needs a source "
+                f"that is an aggregation grouped exactly on {keys}"
+            )
+    else:
         raise ValueError(f"unknown on_duplicate_source={on_duplicate_source!r}")
     return source
+
+
+def _grouped_exactly_on(source: DataFrame, keys: list[str]) -> bool:
+    """True if the source's analyzed plan (no Spark job) is an
+    ``Aggregate`` whose grouping expressions are exactly the merge keys:
+    the output columns named ``keys`` are the grouping columns
+    themselves, and nothing else is grouped on."""
+    plan = source._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "Aggregate":
+        return False
+    grouping = plan.groupingExpressions()
+    ids = set()
+    for i in range(grouping.size()):
+        e = grouping.apply(i)
+        if e.nodeName() not in ("AttributeReference", "Alias"):
+            return False
+        ids.add(e.toAttribute().exprId().id())
+    out = plan.output()
+    key_ids = {
+        out.apply(i).exprId().id()
+        for i in range(out.size()) if out.apply(i).name() in keys
+    }
+    return len(key_ids) == len(keys) and key_ids == ids
 
 
 def merge_delta(spark: SparkSession, target_path: str, source: DataFrame, keys: list[str]) -> None:
@@ -407,10 +437,10 @@ def merge(
     ``on_duplicate_source='unique_by_construction'`` (r18, explicit
     opt-in) SKIPS the uniqueness-check job: only for sources that are
     key-unique by PLAN SHAPE — an aggregation whose groupBy keys are
-    exactly the merge keys (gold KPI refreshes, audit counts). The
-    caller is asserting a structural fact, not hoping; anything
-    weaker keeps the default check (the r8 q37 lesson: 'happens to be
-    unique at this SF' is not by-construction).
+    exactly the merge keys (gold KPI refreshes). The structural fact is
+    checked on the analyzed plan, with no job, and any other shape
+    raises; anything weaker keeps the default check (the r8 q37 lesson:
+    'happens to be unique at this SF' is not by-construction).
 
     Returns the partitions the source touches, on both branches (see
     :func:`merge_parquet`), so callers never enumerate them again."""

@@ -14,6 +14,17 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 - shuffle partitions default to a small local value but MUST be raised
   (or left to AQE's coalescing from a high initial value) on a real
   cluster; ``build_session`` takes it as a parameter for that reason.
+- **Generated-class cache sized to the working set**
+  (``CODEGEN_CACHE_ENTRIES``). Spark keeps at most 100 compiled classes
+  by default and evicts the least recently used, while one round robin
+  of the 12 headline queries needs ~145 and one medallion cycle ~195:
+  every class was evicted before its next use, so every steady
+  operation recompiled (~12 classes per query) and ran freshly loaded,
+  un-JIT-ed code. Working sets counted with an unbounded cache: 232
+  entries for the headline round robin, 241–250 for the trickle cycle,
+  1,382 for the 50-query gate sweep at sf0.01 (an entry is per class
+  loader and code, so one plan can count twice). The conf is static:
+  Spark reads it once per JVM, when the JVM first generates code.
 """
 
 from __future__ import annotations
@@ -24,6 +35,8 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+# above the largest measured working set (1,382 entries, the 50-query sweep)
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def build_session(
@@ -47,6 +60,7 @@ def build_session(
         # the one place AQE's runtime statistics were not applied.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")

@@ -225,3 +225,22 @@ def test_oracle_sf_dir_env_outranks_hardcoded_default(tmp_path, monkeypatch):
     # explicit arg still outranks the env
     assert _events_us_oracle_expr("/root/testdata/sf0.01") == "epoch_us(ts)"
     monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
+
+
+def test_events_query_leaves_nanos_conf_as_it_was(spark, sf_smoke):
+    """A catalog query leaves the caller's session as it found it: the
+    legacy nanosAsLong conf is needed only for a timestamp[ns] footer,
+    and the testdata's events are timestamp[us]."""
+    from lab6_real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.plans.queries import (
+        catalog,
+    )
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    spark.conf.unset(key)  # an earlier nanos-layout test may have set it
+    try:
+        catalog()["q17_events_hourly"](spark, sf_smoke).collect()
+        assert spark.conf.get(key, None) is None
+    finally:
+        if saved is not None:
+            spark.conf.set(key, saved)

@@ -234,6 +234,32 @@ def test_merge_unique_by_construction_skips_check_same_result(spark, tmp_path):
         )
 
 
+def test_unique_by_construction_rejects_other_plan_shapes(spark, tmp_path):
+    """The opt-in is checked on the analyzed plan: a source that is not
+    an aggregation grouped exactly on the merge keys raises before any
+    write, even when its rows happen to be key-unique."""
+    from pyspark.sql import functions as F
+
+    base = spark.createDataFrame(
+        [(1, "a", 2.0), (2, "b", 5.0)], "k long, s string, v double"
+    )
+    misuses = {
+        "projection": base.select("k", "v"),
+        "grouped on more than the keys": base.groupBy("k", "s").agg(F.sum("v").alias("v")),
+        "grouped on fewer than the keys": base.groupBy("k").agg(F.max("s").alias("s")),
+        "aggregate under a filter": base.groupBy("k").agg(F.sum("v").alias("v")).filter("v > 0"),
+    }
+    keys = {"grouped on fewer than the keys": ["k", "s"]}
+    path = str(tmp_path / "t")
+    for what, source in misuses.items():
+        with pytest.raises(ValueError, match="grouped exactly on"):
+            upsert.merge(
+                spark, path, source, keys=keys.get(what, ["k"]),
+                on_duplicate_source="unique_by_construction",
+            )
+        assert not os.path.exists(path), what
+
+
 def test_partitioned_merge_reads_null_and_escaped_partitions(spark, tmp_path):
     """The partitioned MERGE reads only the touched partitions' directories,
     named as Spark names them: a null value lives in
